@@ -1,25 +1,22 @@
-"""Readers / writers / incremental state.
+"""Readers / writers / table commits.
 
 Replaces the reference's storage lifecycle (SURVEY.md §2.10):
-* Postgres `COPY FROM STDIN` bulk load  → vectorized Parquet append.
-* `loaded_to_silver` row flag           → batch high-water mark
-  (`init_db.py:86-87`, `silver_load.sql:219,273-275`).
-* `REFRESH MATERIALIZED VIEW`           → atomic overwrite publish
+* Postgres `COPY FROM STDIN` bulk load  → replay-safe batch append.
+* `REFRESH MATERIALIZED VIEW`           → atomic version-swap publish
   (`gold_ddl.sql:201-244`).
-* transactional multi-step ETL          → idempotent per-table publish
-  (`silver_load.sql:285-308`).
+* transactional multi-step ETL          → per-table commits that a retry
+  repeats to the same state (`silver_load.sql:285-308`).
 
-Scale notes: all writes are plain DataFrame writes (Tungsten/Parquet);
-publish is write-temp-then-swap so readers never see partial output; the
-high-water mark is a tiny JSON sidecar, not a scan of the data.
+Scale notes: all writes are plain DataFrame writes (Tungsten/Parquet).
+A table changes only through :func:`append` (replaces its batch
+partitions) or :func:`publish_overwrite` (one symlink swap), so readers
+never see partial output.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -78,26 +75,126 @@ def _normalize_event_ts(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Atomic publish (replaces MV refresh + multi-table transaction, D4/S11)
+# Table commits (replace MV refresh + multi-table transaction, D3/D4/S11)
 # ---------------------------------------------------------------------------
 
 
-def publish_overwrite(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """Write ``df`` to ``path`` atomically: write temp dir, then swap.
+def append(df: DataFrame, path: str, partition_by: list[str]) -> None:
+    """Replay-safe batch write (stand-in for COPY, load_bronze.py:81-95):
+    a dynamic partition overwrite replaces exactly the partitions in
+    ``df``, so writing batch N again replaces batch N. Unpartitioned, it
+    would replace the whole table, so that is refused."""
+    if not partition_by:
+        raise ValueError(f"append to {path} needs the batch partition columns")
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
 
-    Readers either see the old table or the new one, never a partial
-    write — the Spark-native stand-in for `REFRESH MATERIALIZED VIEW`
-    (gold_ddl.sql:201-244) and the all-or-nothing silver transaction
-    (silver_load.sql:285-308). Idempotent: re-running overwrites again.
-    """
-    tmp = f"{path}._tmp_{int(time.time() * 1000)}"
+
+def publish_overwrite(
+    df: DataFrame, path: str, partition_by: list[str] | None = None, keep: int = 3
+) -> int:
+    """Publish ``df`` as a new version of the table at ``path`` and return
+    its number. ``path`` is a symlink to an immutable version directory
+    ``.<name>.v=N`` beside it; the version is written in full, then
+    ``path`` is repointed by one ``os.replace``, so readers see the old
+    table or the new one, never a gap. A failed write removes its version;
+    one killed mid-write lacks Spark's ``_SUCCESS`` and is never listed.
+    Readers of a resolved version survive later publishes (time travel,
+    :func:`rollback`); committed versions beyond the newest ``keep`` are
+    pruned, the current one always kept."""
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(tmp, path)
+    return _commit(writer, path, keep)
+
+
+publish_versioned = publish_overwrite
+
+
+def _commit(writer, path: str, keep: int = 3) -> int:
+    """Write a new version of ``path`` with ``writer``, repoint, prune."""
+    version = max(_version_dirs(path), default=0) + 1
+    vdir = _version_dir(path, version)
+    try:
+        writer.parquet(vdir)
+        _repoint(path, version)
+    except BaseException:
+        shutil.rmtree(vdir, ignore_errors=True)
+        raise
+    retained = set(list_versions(path)[-keep:]) | {_current(path)}
+    for old, d in _version_dirs(path).items():
+        if old not in retained:
+            shutil.rmtree(d, ignore_errors=True)
+    return version
+
+
+def _version_dir(path: str, version: int) -> str:
+    head, name = os.path.split(path)
+    return os.path.join(head, f".{name}.v={version}")
+
+
+def _version_dirs(path: str) -> dict[int, str]:
+    """Every version directory of ``path``, committed or not."""
+    head, name = os.path.split(path)
+    head, prefix = head or ".", f".{name}.v="
+    names = os.listdir(head) if os.path.isdir(head) else []
+    return {int(d[len(prefix):]): os.path.join(head, d)
+            for d in names if d.startswith(prefix) and d[len(prefix):].isdigit()}
+
+
+def _current(path: str) -> int | None:
+    """The version ``path`` points at (None for a missing or in-place table)."""
+    if not os.path.islink(path):
+        return None
+    return int(os.readlink(path).rsplit("=", 1)[1])
+
+
+def _repoint(path: str, version: int) -> None:
+    """Point ``path`` at ``version``: the swap, one atomic ``os.replace``."""
+    target = _version_dir(path, version)
+    link = f"{target}.link"
+    if os.path.lexists(link):
+        os.remove(link)
+    os.symlink(os.path.basename(target), link)
+    if os.path.isdir(path) and not os.path.islink(path):
+        # a table written in place (e.g. by append) cannot be replaced by
+        # a symlink: move it aside as version 0 (pruned like any old
+        # version), leaving only the gap between two renames
+        os.rename(path, _version_dir(path, 0))
+    os.replace(link, path)
+
+
+def list_versions(path: str) -> list[int]:
+    """Committed snapshot versions of ``path`` (ascending)."""
+    dirs = _version_dirs(path)
+    return sorted(v for v, d in dirs.items() if os.path.exists(os.path.join(d, "_SUCCESS")))
+
+
+def read_versioned(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
+    """Read the current snapshot, or time-travel to ``version``."""
+    v = version if version is not None else _current(path)
+    if v not in list_versions(path):
+        raise FileNotFoundError(
+            f"version {v} of {path} not found (pruned or never written); "
+            f"available: {list_versions(path)}"
+        )
+    return spark.read.parquet(_version_dir(path, v))
+
+
+def rollback(path: str, version: int) -> None:
+    """Repoint ``path`` at an older retained snapshot — the undo for a bad
+    publish. The bad version stays on disk (forensics) until pruning
+    retires it."""
+    if version not in list_versions(path):
+        raise FileNotFoundError(
+            f"cannot roll back {path} to pruned/unknown version {version}; "
+            f"available: {list_versions(path)}"
+        )
+    _repoint(path, version)
 
 
 def read_evolved(
@@ -130,105 +227,6 @@ def read_evolved(
         else:
             cols.append(F.lit(None).cast(field.dataType).alias(field.name))
     return df.select(*cols)
-
-
-_CURRENT_PTR = "_CURRENT"
-
-
-def publish_versioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None = None,
-    keep: int = 3,
-) -> int:
-    """Snapshot publish: write an immutable ``v=N`` directory, then
-    atomically repoint the ``_CURRENT`` file — the minimal table-format
-    core (versioned snapshots + atomic commit + time travel + rollback)
-    that Delta/Iceberg build on, over plain parquet.
-
-    Compared to :func:`publish_overwrite` (which destroys the previous
-    table during the swap window for any reader that re-lists the
-    path), versions are never mutated after the pointer moves: a reader
-    resolves ``_CURRENT`` once and reads a directory no writer will
-    touch again, so long-running queries survive concurrent republishes
-    — the isolation the reference gets from Postgres MVCC and plain
-    parquet directories lack. The pointer write is a same-filesystem
-    ``os.replace`` (atomic); crash before the repoint leaves a dangling
-    version directory that the next publish prunes, never a corrupt
-    table.
-
-    Old versions beyond ``keep`` are pruned (the current pointer's
-    target is always retained) — the vacuum knob: larger ``keep`` =
-    longer time-travel horizon, more storage. Returns the new version
-    number."""
-    versions = list_versions(path)
-    version = (max(versions) + 1) if versions else 1
-    vdir = os.path.join(path, f"v={version}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(vdir)
-    _repoint(path, version)
-    current = _read_pointer(path)
-    for old in sorted(list_versions(path))[:-keep]:
-        if old != current:
-            shutil.rmtree(os.path.join(path, f"v={old}"), ignore_errors=True)
-    return version
-
-
-def _repoint(path: str, version: int) -> None:
-    tmp = os.path.join(path, f".{_CURRENT_PTR}.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, os.path.join(path, _CURRENT_PTR))
-
-
-def _read_pointer(path: str) -> int:
-    with open(os.path.join(path, _CURRENT_PTR)) as f:
-        return int(f.read().strip())
-
-
-def list_versions(path: str) -> list[int]:
-    """All snapshot versions present on disk (ascending)."""
-    if not os.path.isdir(path):
-        return []
-    out = []
-    for name in os.listdir(path):
-        if name.startswith("v=") and name[2:].isdigit():
-            out.append(int(name[2:]))
-    return sorted(out)
-
-
-def read_versioned(spark: SparkSession, path: str, version: int | None = None) -> DataFrame:
-    """Read the current snapshot, or time-travel to ``version``."""
-    v = version if version is not None else _read_pointer(path)
-    vdir = os.path.join(path, f"v={v}")
-    if not os.path.isdir(vdir):
-        raise FileNotFoundError(
-            f"version {v} of {path} not found (pruned or never written); "
-            f"available: {list_versions(path)}"
-        )
-    return spark.read.parquet(vdir)
-
-
-def rollback(path: str, version: int) -> None:
-    """Repoint ``_CURRENT`` at an older retained snapshot — the undo
-    for a bad publish. The bad version stays on disk (forensics) until
-    version pruning retires it."""
-    if version not in list_versions(path):
-        raise FileNotFoundError(
-            f"cannot roll back {path} to pruned/unknown version {version}; "
-            f"available: {list_versions(path)}"
-        )
-    _repoint(path, version)
-
-
-def append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    """Append-only bronze write (stand-in for COPY, load_bronze.py:81-95)."""
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
 
 
 def publish_bucketed(
@@ -323,8 +321,7 @@ def publish_zordered(
     63 // len(cols) so the interleaved value still fits a long (fewer
     bits per dimension = coarser boxes, still far better than no
     clustering). The curve column is dropped before the write; the
-    write itself is the same temp-dir-then-swap as
-    :func:`publish_overwrite`."""
+    write itself is the atomic version swap of :func:`publish_overwrite`."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
@@ -377,8 +374,8 @@ def write_training_shards(
     distribution, so skewed keys still split evenly);
     sortWithinPartitions fixes intra-shard order;
     ``maxRecordsPerFile`` caps any residual oversized range. The write
-    is the atomic temp-dir-and-swap publish, so a half-written shard
-    set is never visible."""
+    is the atomic version swap of :func:`publish_overwrite`, so a
+    half-written shard set is never visible."""
     if rows_per_shard <= 0:
         raise ValueError(f"rows_per_shard must be positive, got {rows_per_shard}")
     if n_shards is None:
@@ -387,15 +384,8 @@ def write_training_shards(
         df.repartitionByRange(n_shards, *order_cols)
         .sortWithinPartitions(*order_cols)
     )
-    tmp = f"{path}._tmp_{int(time.time() * 1000)}"
-    (
-        clustered.write.mode("overwrite")
-        .option("maxRecordsPerFile", rows_per_shard)
-        .parquet(tmp)
-    )
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(tmp, path)
+    writer = clustered.write.mode("overwrite").option("maxRecordsPerFile", rows_per_shard)
+    _commit(writer, path)
     return sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
 
 
@@ -412,7 +402,7 @@ def compact_table(
     micro-batch writes at least one per partition); at 100 TB the
     resulting footer-read storm dominates scan setup and kills
     data-skipping locality. Compaction = size-aware repartition +
-    temp-dir-and-swap publish, so readers never see a half-compacted
+    atomic version swap, so readers never see a half-compacted
     table. Sizing comes from a recursive filesystem walk (driver-side
     control metadata, no data read) so Hive-partitioned layouts size
     correctly. A ``key=value``-partitioned table keeps its layout: the
@@ -480,40 +470,3 @@ def _partition_keys(path: str) -> list[str]:
             return keys
         keys.append(subs[0].split("=", 1)[0])
         cur = os.path.join(cur, subs[0])
-
-
-# ---------------------------------------------------------------------------
-# High-water mark (replaces the loaded_to_silver boolean flag, D3)
-# ---------------------------------------------------------------------------
-
-
-class HighWaterMark:
-    """Tiny JSON sidecar tracking the last batch id consumed per stage.
-
-    The reference marks consumed bronze rows with
-    ``UPDATE ... SET loaded_to_silver = TRUE`` (silver_load.sql:273-275) —
-    an anti-pattern at 100 TB (rewrites the fact table every run). Here
-    bronze is partitioned by ``_batch_id`` and each downstream stage
-    remembers the highest batch it has consumed; incremental reads are
-    partition-pruned scans ``WHERE _batch_id > hwm``.
-    """
-
-    def __init__(self, state_dir: str):
-        self.state_dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
-
-    def _path(self, stage: str) -> str:
-        return os.path.join(self.state_dir, f"{stage}.hwm.json")
-
-    def get(self, stage: str) -> int:
-        p = self._path(stage)
-        if not os.path.exists(p):
-            return -1
-        with open(p) as f:
-            return json.load(f)["batch_id"]
-
-    def set(self, stage: str, batch_id: int) -> None:
-        tmp = self._path(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batch_id": batch_id, "updated_utc": time.time()}, f)
-        os.replace(tmp, self._path(stage))

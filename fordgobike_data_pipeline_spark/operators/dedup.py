@@ -26,17 +26,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def content_hash(*cols) -> Column:
+    """Exact-duplicate content key: md5 of the columns joined on a control
+    character, so ("ab","c") does not hash like ("a","bc"); for one column
+    it is md5(col) (the oracle's md5(text)), NULL as md5('')."""
+    return F.md5(F.concat_ws("\x01", *cols))
+
+
 def exact_dedup(
     df: DataFrame, content_cols: list[str], id_col: str = "doc_id"
 ) -> DataFrame:
-    """One surviving row (min id) per exact content hash; keeps the
-    duplicate count. Single hash-partitioned aggregation.
-
-    Columns join on a control-character separator so multi-column
-    content is unambiguous — ("ab","c") must not hash like ("a","bc");
-    with a single column no separator appears, so the hash is
-    md5(col) exactly (matching the oracle's md5(text))."""
-    key = F.md5(F.concat_ws("", *content_cols)).alias("content_hash")
+    """One surviving row (min id) per exact :func:`content_hash`; keeps
+    the duplicate count. Single hash-partitioned aggregation."""
+    key = content_hash(*content_cols).alias("content_hash")
     return (
         df.select(key, F.col(id_col))
         .groupBy("content_hash")
@@ -1022,15 +1024,14 @@ def dup_weight(
     not forty) — the standard soft alternative when duplicates carry
     signal (popularity, canonical-ness) you don't want to erase.
 
-    Same md5 content key as :func:`exact_dedup` (control-character
-    separator for multi-column content), so the three strategies
-    agree on what "a duplicate" is. One hash-partitioned aggregation
-    (|distinct contents| rows) joined back on the hash — at 100 TB
+    Same :func:`content_hash` key as :func:`exact_dedup`, so the three
+    strategies agree on what "a duplicate" is. One hash-partitioned
+    aggregation (|distinct contents| rows) joined back on the hash — at 100 TB
     the group table is the same size exact dedup already builds, and
     the weight is one exact int/int division per row (n_copies is a
     small integer, the quotient is correctly rounded — bit-stable on
     any engine, no decimal re-round)."""
-    key = F.md5(F.concat_ws("\x1f", *content_cols)).alias("content_hash")
+    key = content_hash(*content_cols).alias("content_hash")
     groups = df.select(key, F.col(id_col)).groupBy("content_hash").agg(
         F.count(F.lit(1)).cast("long").alias("n_copies")
     )

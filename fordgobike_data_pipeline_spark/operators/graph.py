@@ -179,7 +179,9 @@ def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Data
     # side broadcast). Ids beyond 31 bits fall back to the pair key.
     lo, hi = e.agg(F.min("u"), F.max("v")).first()
     if lo is not None and lo >= 0 and hi < (1 << 31):
-        pack = lambda x, y: F.shiftleft(x, 31).bitwiseOR(y)  # noqa: E731
+        # long operands: shiftleft keeps an int input's type, so int ids
+        # would wrap (the cast is dropped as redundant for bigint ids)
+        pack = lambda x, y: F.shiftleft(x.cast("long"), 31).bitwiseOR(y.cast("long"))  # noqa: E731
         closing = oriented.select(
             pack(F.least("src", "dst"), F.greatest("src", "dst")).alias("xy")
         )

@@ -625,7 +625,7 @@ def build_ivf_index(
     every query batch reads ONLY its probed list partitions (directory-
     level partition pruning — at 100 TB a nprobe=3 probe touches
     3/|centroids| of the index files, not the corpus). Writes go
-    through the atomic temp-dir-and-swap publish."""
+    through the atomic version-swap publish."""
     from ..io import publish_overwrite
 
     cent = kmeans_centroids(emb, id_col, vec_col, centroid_mod, kmeans_iters)

@@ -157,6 +157,8 @@ def winnowing_fingerprints(
     inside a higher-order function once PER ELEMENT, so inlining the
     O(n)-cost hash build into the min lambda would be O(n²) per doc
     (the token_shingles / unit_normalize trap)."""
+    if window < 1:
+        raise ValueError(f"window must be >= 1, got {window}")
     if hash_fn == "md5-parity":
         helem = lambda g: F.conv(  # noqa: E731
             F.substring(F.md5(g), 1, 16), 16, -10
@@ -181,7 +183,8 @@ def winnowing_fingerprints(
     # their min — same semantics as the former slice+array_min but
     # without allocating a window-sized array per position (measured
     # 0.5s of 4.7s at sf0.1, output byte-identical)
-    mins = F.transform(
+    # (window 1 keeps every gram hash: least() needs two arguments)
+    mins = F.col("_hv") if window == 1 else F.transform(
         F.sequence(F.lit(0), F.size("_hv") - 1),
         lambda i: F.least(*[F.get(F.col("_hv"), i + j) for j in range(window)]),
     )

@@ -550,7 +550,7 @@ def compact_small_files(
     read to PLAN the compaction), then one distributed rewrite sized
     so output files land near ``target_file_bytes``
     (`n_out = ceil(total_bytes / target)`), published through the
-    atomic temp-dir-and-swap (io.publish_overwrite) so readers never
+    atomic version swap (io.publish_overwrite) so readers never
     see a half-compacted table. With ``sort_cols`` the rewrite
     clusters via repartitionByRange + sortWithinPartitions — restoring
     min/max skip-stat locality (the same reasoning as q_zorder) in the

@@ -62,9 +62,7 @@ def clean_corpus(
 
     meta = fan_out(docs).select(
         F.col(id_col),
-        # concat_ws("", c) (not bare md5(c)): single-column content key
-        # identical to dedup.exact_dedup's, incl. NULL -> md5('')
-        F.md5(F.concat_ws("", F.col(text_col))).alias("_chash"),
+        dedup.content_hash(F.col(text_col)).alias("_chash"),
         q_ok.alias("_q"),
         gate_ok.alias("_g"),
     ).localCheckpoint(eager=True)

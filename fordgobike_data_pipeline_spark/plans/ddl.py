@@ -27,7 +27,8 @@ def ensure_namespaces(spark: SparkSession, layers: tuple[str, ...] = LAYERS) -> 
 def register_warehouse_tables(spark: SparkSession, wh: Warehouse) -> list[str]:
     """Register every published parquet table as an external catalog
     table ``<layer>.<name>`` so downstream consumers address tables by
-    name (``spark.table('gold.dm_popular_routes')``), not path."""
+    name (``spark.table('gold.dm_popular_routes')``), not path. Hidden
+    (publish versions) and dotted (temp) names are not tables."""
     import os
 
     ensure_namespaces(spark)
@@ -38,13 +39,13 @@ def register_warehouse_tables(spark: SparkSession, wh: Warehouse) -> list[str]:
             continue
         for table in sorted(os.listdir(layer_dir)):
             path = os.path.join(layer_dir, table)
-            if not os.path.isdir(path):
+            if table.startswith("_") or "." in table or not os.path.isdir(path):
                 continue
             spark.sql(
                 f"CREATE TABLE IF NOT EXISTS {layer}.{table} "
                 f"USING PARQUET LOCATION '{path}'"
             )
-            # partitioned layouts (p_year=.../) read as EMPTY until their
+            # partitioned layouts (_batch_id=.../) read as EMPTY until their
             # partitions are recovered; refresh also invalidates any
             # cached file index after an atomic re-publish
             if any("=" in d for d in os.listdir(path) if os.path.isdir(os.path.join(path, d))):

@@ -2,17 +2,18 @@
 
 Replaces the reference's five Airflow DAGs (ddl → bronze → silver →
 gold → report, SURVEY §2.10 D6): each stage is a function over
-DataFrames; tables publish atomically (io.publish_overwrite) so a
-failed run leaves the previous version intact — the stand-in for the
-reference's single Postgres transaction (silver_load.sql:285-308).
-The run report (S10: Airflow REST scrape → email) becomes a metrics
-table the runner appends to.
+DataFrames. The reference's single Postgres transaction
+(silver_load.sql:285-308) becomes per-table commits a retry or re-fired
+batch repeats to the same state: batch-keyed tables (bronze, the silver
+fact, run metrics) ``append`` over their own batch partition, whole
+tables ``publish_overwrite`` by an atomic version swap. The run report
+(S10: Airflow REST scrape → email) becomes a metrics table.
 
-Incrementality: bronze is partitioned by ``_batch_id``; silver reads
-only batches above its high-water mark (partition-pruned scan), then
-advances the mark — replacing the UPDATE-every-row flag
-(silver_load.sql:273-275), which would rewrite the fact table each run
-at 100 TB.
+Incrementality: bronze and the silver fact are partitioned by
+``_batch_id``; the fact's partitions are silver's progress marker (rows
+and marker commit in one rename), and silver scans only the bronze
+batches the fact lacks — replacing the UPDATE-every-row flag
+(silver_load.sql:273-275), which would rewrite the fact each run.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import HighWaterMark, append, publish_overwrite
+from ..io import append, publish_overwrite
 from . import bronze as bronze_mod
 from . import gold as gold_mod
 from . import silver as silver_mod
@@ -91,15 +92,26 @@ def load_locations(spark: SparkSession, wh: Warehouse, locations_geo: DataFrame)
     publish_overwrite(merged, path)
 
 
+def _batch_ids(path: str) -> set[int]:
+    """Batch ids of a ``_batch_id``-partitioned table, from its partition
+    directory names (a driver-side listing, no Spark job)."""
+    if not os.path.isdir(path):
+        return set()
+    return {int(d.split("=", 1)[1]) for d in os.listdir(path) if d.startswith("_batch_id=")}
+
+
 def build_silver(spark: SparkSession, wh: Warehouse) -> dict[str, int]:
-    """Entry point 2 (SURVEY §3): the five-step silver ETL, incremental
-    over un-consumed bronze batches."""
-    hwm = HighWaterMark(os.path.join(wh.root, "_state"))
-    mark = hwm.get("silver")
-    all_trips = wh.read(spark, "bronze", "bike_trips")
-    new_trips = all_trips.filter(F.col("_batch_id") > mark)
-    if new_trips.isEmpty():
+    """Entry point 2 (SURVEY §3): the five-step silver ETL over the bronze
+    batches without a fact partition. That partition's write is the
+    commit: before it the batch stays pending (the dims' conflict-skip
+    merge re-runs as a no-op), after it there is nothing to redo."""
+    pending = sorted(
+        _batch_ids(wh.path("bronze", "bike_trips"))
+        - _batch_ids(wh.path("silver", "fact_trips"))
+    )
+    if not pending:
         return {"consumed_batches": 0}
+    new_trips = wh.read(spark, "bronze", "bike_trips").filter(F.col("_batch_id").isin(pending))
     geo = wh.read(spark, "bronze", "locations")
 
     def merge(table: str, new: DataFrame, keys: list[str]) -> DataFrame:
@@ -121,18 +133,8 @@ def build_silver(spark: SparkSession, wh: Warehouse) -> dict[str, int]:
 
     dim_loc_published = wh.read(spark, "silver", "dim_locations")
     new_facts = silver_mod.build_fact_trips(new_trips, dim_loc_published)
-    # fact is append-only per batch, partitioned by start-date year for
-    # downstream partition pruning at scale
-    fact = new_facts.withColumn("p_year", (F.col("start_date_id") / 10000).cast("int"))
-    existing_fact = (
-        wh.read(spark, "silver", "fact_trips") if wh.exists("silver", "fact_trips") else None
-    )
-    merged_fact = fact if existing_fact is None else existing_fact.unionByName(fact)
-    publish_overwrite(merged_fact, wh.path("silver", "fact_trips"), partition_by=["p_year"])
-
-    max_batch = all_trips.agg(F.max("_batch_id")).first()[0]
-    hwm.set("silver", int(max_batch))
-    return {"consumed_batches": 1}
+    append(new_facts, wh.path("silver", "fact_trips"), partition_by=["_batch_id"])
+    return {"consumed_batches": len(pending)}
 
 
 def build_gold(spark: SparkSession, wh: Warehouse) -> None:
@@ -335,7 +337,7 @@ def run_pipeline(
         with_retries(fn, retries=2, delay_sec=1.0)
         metrics.append((batch_id, stage, round(time.perf_counter() - t0, 3)))
     mdf = spark.createDataFrame(metrics, "batch_id INT, stage STRING, wall_sec DOUBLE")
-    append(mdf, wh.path("_state", "run_metrics"))
+    append(mdf, wh.path("_state", "run_metrics"), partition_by=["batch_id"])
     return {"batch_id": batch_id, "stages": [m[1] for m in metrics]}
 
 

@@ -372,7 +372,7 @@ def stream_maintain_mv(
     stream_curate_documents): the partials write converges under
     replay because it overwrites the batch's own partition; the MV is
     a pure function of the partials table and is published with the
-    temp-dir-and-swap, so readers always see a complete MV — at worst
+    atomic version swap, so readers always see a complete MV — at worst
     one batch stale between the partials write and the republish, and
     the replay closes exactly that gap."""
     if schema is None:
@@ -481,7 +481,7 @@ def stream_apply_changelog(
     in (the same pruning contract as the HWM bronze reads). Crash
     contract: latest_wins(state' ∪ B) = state' — replaying a batch
     already folded into state is a no-op — and both writes go through
-    temp-dir-and-swap, so readers never see a torn state or snapshot.
+    the atomic version swap, so readers never see a torn state or snapshot.
     """
     stream = spark.readStream.schema(schema).json(landing_dir)
 

@@ -381,6 +381,19 @@ def test_winnowing_robust_to_local_edits(spark):
     assert len(a & other) / len(a | other) < 0.2
 
 
+def test_winnowing_window_one_keeps_every_gram_and_rejects_zero(spark):
+    import pytest
+
+    docs = spark.createDataFrame([(1, "abcabcab")], "doc_id LONG, text STRING")
+    fp = {r.fingerprint for r in text.winnowing_fingerprints(docs, k=3, window=1).collect()}
+    grams = {r.h for r in spark.createDataFrame(
+        [("abc",), ("bca",), ("cab",)], "g STRING"
+    ).select(F.xxhash64("g").alias("h")).collect()}
+    assert fp == grams
+    with pytest.raises(ValueError, match="window"):
+        text.winnowing_fingerprints(docs, k=3, window=0)
+
+
 def test_deterministic_sample_properties(spark):
     """Same rows across runs AND across repartitionings; rate ≈
     requested; stratified keeps 100% strata intact."""

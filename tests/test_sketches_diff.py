@@ -83,6 +83,20 @@ def test_triangle_count_known_graphs(spark):
     assert (r4.n_edges, r4.n_triangles) == (6, 4)
 
 
+def test_triangle_count_int_ids_do_not_wrap_packed_key(spark):
+    """The packed (x, y) key is built in long arithmetic: with int ids a
+    31-bit shift wraps, so x=0 and x=2 pack alike and the open wedge
+    (0, 3) here would be closed by the edge (2, 3). For bigint ids the
+    cast is redundant and gone from the optimized plan."""
+    edges = [(0, 2), (0, 3), (1, 2), (3, 4)]  # a tree: no triangles
+    for typ in ("INT", "LONG"):
+        out = graph.triangle_count(spark.createDataFrame(edges, f"a {typ}, b {typ}"))
+        assert out.first().n_triangles == 0, typ
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    packs = [line for line in plan.splitlines() if "shiftleft" in line]
+    assert packs and not any("cast(" in line for line in packs)
+
+
 def test_keyword_search_requires_all_terms(spark):
     docs = spark.createDataFrame(
         [
