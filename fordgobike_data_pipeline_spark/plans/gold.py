@@ -1,11 +1,15 @@
 """Gold layer — four aggregate data marts + four renaming views.
 
-Re-expresses the reference's materialized views
-(include/sql/gold/gold_ddl.sql:11-193). Refresh semantics
-(`REFRESH MATERIALIZED VIEW`, gold_ddl.sql:201-244) become recompute +
-atomic overwrite in plans/runner.py; the four marts are independent
-DataFrame jobs (the reference fans them out in parallel,
+Re-expresses the reference's gold schema (include/sql/gold/gold_ddl.sql).
+The marts are materialized views there (gold_ddl.sql:11-132); their
+`REFRESH MATERIALIZED VIEW` (gold_ddl.sql:201-244) becomes a full
+recompute + atomic publish in ``runner.build_gold``. The four marts are
+independent DataFrame jobs (the reference fans them out in parallel,
 dags/gold_dag.py:70 — Spark's scheduler does the same within a session).
+The renaming views are plain views over silver there
+(gold_ddl.sql:135-193) and stay plain views here: ``RENAMING_VIEWS``
+defines each one, and ``ddl.register_warehouse_tables`` creates it in
+the catalog, so no run copies silver into gold.
 
 Scale notes: every dim join broadcasts; the fact is scanned once per
 mart with partial aggregation map-side. Exchange reuse makes the twin
@@ -152,66 +156,67 @@ def dm_user_behavior_summary(
 
 
 # ---------------------------------------------------------------------------
-# Renaming views (gold_ddl.sql:135-193) — pure projection/alias
+# Renaming views (gold_ddl.sql:135-193) — pure projection/alias, created as
+# catalog views over silver by ddl.register_warehouse_tables
 # ---------------------------------------------------------------------------
 
-
-def dim_locations_view(dim_locations: DataFrame) -> DataFrame:
-    """gold.dim_locations_view (gold_ddl.sql:135-150)."""
-    return dim_locations.select(
-        F.col("location_id").alias("id"),
-        F.col("latitude").alias("lat"),
-        F.col("longitude").alias("lng"),
-        F.col("highway").alias("highway_name"),
-        F.col("road").alias("road_name"),
-        F.col("neighbourhood").alias("neighborhood"),
-        F.col("suburb").alias("suburb_name"),
-        F.col("city").alias("city_name"),
-        F.col("state").alias("state_name"),
-        F.col("postcode").alias("postal_code"),
-        F.col("country").alias("country_name"),
-        F.col("display_name").alias("full_address"),
-        "station_name",
-    )
-
-
-def dim_user_types_view(dim_user_types: DataFrame) -> DataFrame:
-    """gold.dim_user_types_view (gold_ddl.sql:155-162)."""
-    return dim_user_types.select(
-        F.col("user_type_id").alias("id"),
-        F.col("user_type").alias("user_category"),
-        F.col("member_birth_year").alias("birth_year"),
-        F.col("member_gender").alias("gender"),
-        F.col("bike_share_for_all_trip").alias("bike_share_option"),
-    )
-
-
-def dim_date_view(dim_date: DataFrame) -> DataFrame:
-    """gold.dim_date_view (gold_ddl.sql:166-177)."""
-    return dim_date.select(
-        F.col("date_id").alias("id"),
-        F.col("year").alias("year_number"),
-        F.col("month").alias("month_number"),
-        F.col("month_name").alias("month_name_text"),
-        F.col("day").alias("day_number"),
-        F.col("quarter").alias("quarter_number"),
-        F.col("day_of_week").alias("weekday_number"),
-        F.col("day_name").alias("weekday_name"),
-        F.col("is_weekend").alias("weekend_flag"),
-    )
-
-
-def fact_trips_view(fact_trips: DataFrame) -> DataFrame:
-    """gold.fact_trips_view (gold_ddl.sql:181-193)."""
-    return fact_trips.select(
-        F.col("trip_id").alias("id"),
-        F.col("duration_min").alias("duration_minutes"),
-        F.col("start_location_id").alias("start_location"),
-        F.col("start_date_id").alias("start_date"),
-        F.col("start_time").alias("start_time_of_day"),
-        F.col("end_location_id").alias("end_location"),
-        F.col("end_date_id").alias("end_date"),
-        F.col("end_time").alias("end_time_of_day"),
-        F.col("bike_id").alias("bike_identifier"),
-        F.col("user_type_id").alias("user_type"),
-    )
+# view name -> (silver source table, ordered (source column, view column) pairs)
+RENAMING_VIEWS: dict[str, tuple[str, tuple[tuple[str, str], ...]]] = {
+    "dim_locations_view": (  # gold_ddl.sql:135-150
+        "silver.dim_locations",
+        (
+            ("location_id", "id"),
+            ("latitude", "lat"),
+            ("longitude", "lng"),
+            ("highway", "highway_name"),
+            ("road", "road_name"),
+            ("neighbourhood", "neighborhood"),
+            ("suburb", "suburb_name"),
+            ("city", "city_name"),
+            ("state", "state_name"),
+            ("postcode", "postal_code"),
+            ("country", "country_name"),
+            ("display_name", "full_address"),
+            ("station_name", "station_name"),
+        ),
+    ),
+    "dim_user_types_view": (  # gold_ddl.sql:155-162
+        "silver.dim_user_types",
+        (
+            ("user_type_id", "id"),
+            ("user_type", "user_category"),
+            ("member_birth_year", "birth_year"),
+            ("member_gender", "gender"),
+            ("bike_share_for_all_trip", "bike_share_option"),
+        ),
+    ),
+    "dim_date_view": (  # gold_ddl.sql:166-177
+        "silver.dim_date",
+        (
+            ("date_id", "id"),
+            ("year", "year_number"),
+            ("month", "month_number"),
+            ("month_name", "month_name_text"),
+            ("day", "day_number"),
+            ("quarter", "quarter_number"),
+            ("day_of_week", "weekday_number"),
+            ("day_name", "weekday_name"),
+            ("is_weekend", "weekend_flag"),
+        ),
+    ),
+    "fact_trips_view": (  # gold_ddl.sql:181-193
+        "silver.fact_trips",
+        (
+            ("trip_id", "id"),
+            ("duration_min", "duration_minutes"),
+            ("start_location_id", "start_location"),
+            ("start_date_id", "start_date"),
+            ("start_time", "start_time_of_day"),
+            ("end_location_id", "end_location"),
+            ("end_date_id", "end_date"),
+            ("end_time", "end_time_of_day"),
+            ("bike_id", "bike_identifier"),
+            ("user_type_id", "user_type"),
+        ),
+    ),
+}

@@ -13,7 +13,11 @@ Incrementality: bronze and the silver fact are partitioned by
 ``_batch_id``; the fact's partitions are silver's progress marker (rows
 and marker commit in one rename), and silver scans only the bronze
 batches the fact lacks — replacing the UPDATE-every-row flag
-(silver_load.sql:273-275), which would rewrite the fact each run.
+(silver_load.sql:273-275), which would rewrite the fact each run. Gold
+recomputes its four marts in full, as the reference's ``REFRESH
+MATERIALIZED VIEW`` does (gold_ddl.sql:201-244); incremental mart
+maintenance is ``operators.warehouse``'s mergeable partials
+(``aggregate_partials``/``merge_aggregate_partials``).
 """
 
 from __future__ import annotations
@@ -138,8 +142,9 @@ def build_silver(spark: SparkSession, wh: Warehouse) -> dict[str, int]:
 
 
 def build_gold(spark: SparkSession, wh: Warehouse) -> None:
-    """Entry point 3 (SURVEY §3): recompute the four marts (independent
-    jobs) + the renaming views."""
+    """Entry point 3 (SURVEY §3): recompute and publish the four marts
+    (independent jobs). The renaming views are catalog views over silver
+    (``ddl.register_warehouse_tables``), so gold writes nothing else."""
     fact = wh.read(spark, "silver", "fact_trips")
     dim_locations = wh.read(spark, "silver", "dim_locations")
     dim_user_types = wh.read(spark, "silver", "dim_user_types")
@@ -152,10 +157,6 @@ def build_gold(spark: SparkSession, wh: Warehouse) -> None:
         "dm_user_behavior_summary": gold_mod.dm_user_behavior_summary(
             fact, dim_user_types, dim_date
         ),
-        "dim_locations_view": gold_mod.dim_locations_view(dim_locations),
-        "dim_user_types_view": gold_mod.dim_user_types_view(dim_user_types),
-        "dim_date_view": gold_mod.dim_date_view(dim_date),
-        "fact_trips_view": gold_mod.fact_trips_view(fact),
     }
     # the marts are independent jobs — submit concurrently so the Spark
     # scheduler interleaves their stages (the reference fans out its four
@@ -169,152 +170,6 @@ def build_gold(spark: SparkSession, wh: Warehouse) -> None:
         }
         for name, fut in futures.items():
             fut.result()  # surface the first failure
-
-
-def _null_safe_cond(left: DataFrame, right: DataFrame, keys: list[str]):
-    cond = None
-    for k in keys:
-        c = left[k].eqNullSafe(right[k])
-        cond = c if cond is None else cond & c
-    return cond
-
-
-def _splice_publish(
-    spark: SparkSession,
-    wh: Warehouse,
-    table: str,
-    recomputed: DataFrame,
-    affected_keys: DataFrame,
-    key_cols: list[str],
-) -> None:
-    """Replace exactly the affected key groups of a published mart:
-    existing ⟕̸(null-safe) affected ∪ recomputed, then atomic publish.
-    Null-safe matching so NULL-valued group keys (e.g. unknown age)
-    splice correctly instead of duplicating."""
-    path = wh.path("gold", table)
-    if os.path.exists(path):
-        existing = wh.read(spark, "gold", table)
-        untouched = existing.join(
-            F.broadcast(affected_keys),
-            _null_safe_cond(existing, affected_keys, key_cols),
-            "left_anti",
-        ).select(*recomputed.columns)
-        merged = untouched.unionByName(recomputed)
-    else:
-        merged = recomputed
-    publish_overwrite(merged, path)
-
-
-def refresh_daily_summary_incremental(
-    spark: SparkSession, wh: Warehouse, new_batch_min: int
-) -> None:
-    """Back-compat wrapper: incremental refresh of the daily mart only."""
-    build_gold_incremental(spark, wh, new_batch_min, marts=("dm_daily_trip_summary",))
-
-
-def build_gold_incremental(
-    spark: SparkSession,
-    wh: Warehouse,
-    new_batch_min: int,
-    marts: tuple[str, ...] = (
-        "dm_daily_trip_summary",
-        "dm_station_popularity",
-        "dm_popular_routes",
-        "dm_user_behavior_summary",
-    ),
-) -> None:
-    """Incremental maintenance for the gold marts.
-
-    The reference re-runs each whole MV per refresh (gold_ddl.sql:
-    201-244) — a full fact scan every time. Every mart groups by keys a
-    new batch can only partially touch, so: derive the affected group
-    keys from the batch's fact slice (``_batch_id`` column carried
-    through silver), recompute exactly those groups from the
-    (semi-join-pruned) fact, and splice them over the published mart.
-    At 100 TB this turns refresh-everything into scan-what-changed.
-
-    Correctness per mart: the recompute slice contains *every* fact row
-    belonging to an affected group (group membership is a function of
-    the group key we semi-join on), so recomputed groups are complete;
-    station popularity additionally restricts its output to affected
-    stations because a trip belongs to two station groups at once.
-    """
-    from ..functions import exprs as E
-
-    fact = wh.read(spark, "silver", "fact_trips")
-    dim_locations = wh.read(spark, "silver", "dim_locations")
-    dim_user_types = wh.read(spark, "silver", "dim_user_types")
-    dim_date = wh.read(spark, "silver", "dim_date")
-    new_fact = fact.filter(F.col("_batch_id") >= new_batch_min)
-
-    if "dm_daily_trip_summary" in marts:
-        affected = new_fact.select("start_date_id").distinct()
-        fact_slice = fact.join(F.broadcast(affected), "start_date_id", "left_semi")
-        rec = gold_mod.dm_daily_trip_summary(fact_slice, dim_date)
-        keys = affected.select(E.key_to_date("start_date_id").alias("date"))
-        _splice_publish(spark, wh, "dm_daily_trip_summary", rec, keys, ["date"])
-
-    if "dm_station_popularity" in marts:
-        names = dim_locations.select("location_id", "station_name")
-        touched = (
-            new_fact.join(
-                F.broadcast(names), new_fact.start_location_id == names.location_id
-            )
-            .select("station_name")
-            .union(
-                new_fact.join(
-                    F.broadcast(names), new_fact.end_location_id == names.location_id
-                ).select("station_name")
-            )
-            .filter(F.col("station_name").isNotNull())
-            .distinct()
-        )
-        ids = names.join(F.broadcast(touched), "station_name", "left_semi").select(
-            "location_id"
-        )
-        s_side = fact.join(
-            F.broadcast(ids), fact.start_location_id == ids.location_id, "left_semi"
-        )
-        e_side = fact.join(
-            F.broadcast(ids), fact.end_location_id == ids.location_id, "left_semi"
-        )
-        fact_slice = s_side.unionByName(e_side).dropDuplicates(["trip_id"])
-        rec = gold_mod.dm_station_popularity(fact_slice, dim_locations).join(
-            F.broadcast(touched), "station_name", "left_semi"
-        )
-        _splice_publish(spark, wh, "dm_station_popularity", rec, touched, ["station_name"])
-
-    if "dm_popular_routes" in marts:
-        pairs = (
-            new_fact.select("start_location_id", "end_location_id").distinct().na.drop()
-        )
-        fact_slice = fact.join(
-            F.broadcast(pairs), ["start_location_id", "end_location_id"], "left_semi"
-        )
-        rec = gold_mod.dm_popular_routes(fact_slice, dim_locations)
-        _splice_publish(
-            spark, wh, "dm_popular_routes", rec, pairs,
-            ["start_location_id", "end_location_id"],
-        )
-
-    if "dm_user_behavior_summary" in marts:
-        def keyed(f: DataFrame) -> DataFrame:
-            return (
-                f.join(F.broadcast(dim_user_types), "user_type_id")
-                .join(F.broadcast(dim_date), f.start_date_id == dim_date.date_id)
-                .withColumn("age", F.col("year") - F.col("member_birth_year"))
-            )
-
-        key_cols = ["user_type", "member_gender", "bike_share_for_all_trip", "age"]
-        affected = keyed(new_fact).select(*key_cols).distinct()
-        enriched = keyed(fact)
-        fact_slice = enriched.join(
-            F.broadcast(affected),
-            _null_safe_cond(enriched, affected, key_cols),
-            "left_semi",
-        ).select(*fact.columns)
-        rec = gold_mod.dm_user_behavior_summary(fact_slice, dim_user_types, dim_date)
-        _splice_publish(spark, wh, "dm_user_behavior_summary", rec, affected, key_cols)
 
 
 def run_pipeline(

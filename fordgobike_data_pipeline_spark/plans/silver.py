@@ -184,8 +184,8 @@ def build_fact_trips(trips: DataFrame, dim_locations: DataFrame) -> DataFrame:
     user_type_id is hashed from the *cleaned* attributes so it lands on
     a dim_user_types row by construction (same formula both sides).
     """
-    # lineage passthrough: the batch id enables incremental gold
-    # maintenance downstream (runner.build_gold_incremental)
+    # lineage passthrough: the batch id is the fact's partition column,
+    # and its partitions are silver's progress marker (runner.build_silver)
     lineage = [F.col("_batch_id")] if "_batch_id" in trips.columns else []
     cleaned = trips.select(
         *lineage,

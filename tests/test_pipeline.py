@@ -5,6 +5,7 @@ notebook's manual audits plus incremental/idempotency properties."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -139,14 +140,6 @@ def test_gold_user_behavior(spark, wh):
     ).count()
 
 
-def test_renaming_views(spark, wh):
-    v = wh.read(spark, "gold", "dim_date_view")
-    assert set(v.columns) == {
-        "id", "year_number", "month_number", "month_name_text", "day_number",
-        "quarter_number", "weekday_number", "weekday_name", "weekend_flag",
-    }
-
-
 def test_silver_idempotent_rerun(spark, wh):
     """Re-running silver with no new bronze batch is a no-op (D2/D3)."""
     before = wh.read(spark, "silver", "fact_trips").count()
@@ -175,31 +168,6 @@ def test_incremental_second_batch(spark, wh):
     assert max_date >= 20180118
 
 
-def test_incremental_gold_refresh_equals_full(spark, wh):
-    """Splicing only the affected groups must reproduce the full
-    recompute for all four marts (runs after the second batch landed,
-    over marts last published at batch 1)."""
-    from fordgobike_data_pipeline_spark.plans import gold as gold_mod
-
-    runner.build_gold_incremental(spark, wh, new_batch_min=2)
-    fact = wh.read(spark, "silver", "fact_trips")
-    dim_loc = wh.read(spark, "silver", "dim_locations")
-    dim_ut = wh.read(spark, "silver", "dim_user_types")
-    dim_date = wh.read(spark, "silver", "dim_date")
-    full = {
-        "dm_daily_trip_summary": gold_mod.dm_daily_trip_summary(fact, dim_date),
-        "dm_station_popularity": gold_mod.dm_station_popularity(fact, dim_loc),
-        "dm_popular_routes": gold_mod.dm_popular_routes(fact, dim_loc),
-        "dm_user_behavior_summary": gold_mod.dm_user_behavior_summary(
-            fact, dim_ut, dim_date
-        ),
-    }
-    for table, want_df in full.items():
-        got = {tuple(r) for r in wh.read(spark, "gold", table).collect()}
-        want = {tuple(r) for r in want_df.collect()}
-        assert got == want, f"{table}: incremental != full"
-
-
 def test_catalog_registration(spark, wh):
     """D1: published tables addressable by <layer>.<name> via the
     catalog after registration."""
@@ -212,6 +180,102 @@ def test_catalog_registration(spark, wh):
     assert n == spark.read.parquet(wh.path("silver", "fact_trips")).count()
     # idempotent re-registration
     assert set(ddl.register_warehouse_tables(spark, wh)) == set(registered)
+
+
+# reference column lists of the renaming views, in order (gold_ddl.sql:135-193)
+VIEW_COLUMNS = {
+    "dim_locations_view": (
+        "silver.dim_locations",
+        ["id", "lat", "lng", "highway_name", "road_name", "neighborhood", "suburb_name",
+         "city_name", "state_name", "postal_code", "country_name", "full_address",
+         "station_name"],
+    ),
+    "dim_user_types_view": (
+        "silver.dim_user_types",
+        ["id", "user_category", "birth_year", "gender", "bike_share_option"],
+    ),
+    "dim_date_view": (
+        "silver.dim_date",
+        ["id", "year_number", "month_number", "month_name_text", "day_number",
+         "quarter_number", "weekday_number", "weekday_name", "weekend_flag"],
+    ),
+    "fact_trips_view": (
+        "silver.fact_trips",
+        ["id", "duration_minutes", "start_location", "start_date", "start_time_of_day",
+         "end_location", "end_date", "end_time_of_day", "bike_identifier", "user_type"],
+    ),
+}
+
+
+def test_renaming_views_through_catalog(spark, wh):
+    """The renaming views are catalog views over silver: reference
+    columns in order, the source's rows, fresh after another batch, and
+    queryable by a reference user's SQL. Gold holds no copy of them."""
+    from fordgobike_data_pipeline_spark import sql as engine_sql
+    from fordgobike_data_pipeline_spark.plans import ddl
+
+    registered = ddl.register_warehouse_tables(spark, wh)
+    for view, (source, columns) in VIEW_COLUMNS.items():
+        assert f"gold.{view}" in registered
+        df = spark.table(f"gold.{view}")
+        assert df.columns == columns, view
+        assert df.count() == spark.table(source).count(), view
+
+    runner.run_pipeline(
+        spark,
+        wh,
+        fixtures.trips_df(spark, fixtures.make_trips(n=40, seed=23, start_day=20)),
+        fixtures.locations_df(spark),
+        batch_id=3,
+    )
+    gold_tables = [d for d in os.listdir(os.path.join(wh.root, "gold")) if not d.startswith(".")]
+    assert sorted(gold_tables) == [
+        "dm_daily_trip_summary", "dm_popular_routes", "dm_station_popularity",
+        "dm_user_behavior_summary",
+    ]
+    ddl.register_warehouse_tables(spark, wh)
+    fact_rows = wh.read(spark, "silver", "fact_trips").count()
+    assert spark.table("gold.fact_trips_view").count() == fact_rows
+
+    longest = engine_sql.sql(
+        spark,
+        """
+        SELECT id, duration_minutes FROM gold.fact_trips_view
+        ORDER BY duration_minutes DESC, id LIMIT 3
+        """,
+    ).collect()
+    assert len(longest) == 3
+    assert longest[0].duration_minutes >= longest[-1].duration_minutes
+
+
+def _dim_date(spark, n: int):
+    return spark.range(n).selectExpr(
+        "CAST(20180101 + id AS INT) AS date_id", "2018 AS year", "1 AS month",
+        "'January' AS month_name", "CAST(1 + id AS INT) AS day", "1 AS quarter",
+        "1 AS day_of_week", "'Monday' AS day_name", "false AS is_weekend",
+    )
+
+
+def test_registration_repoints_names_at_the_given_warehouse(spark, tmp_path):
+    """Registering a second warehouse in the same session points every
+    name, and the views over them, at the second root. The first one
+    also holds a stale parquet copy of a view, as a warehouse written
+    before the views were catalog views does; the view shadows it."""
+    from fordgobike_data_pipeline_spark.io import publish_overwrite
+    from fordgobike_data_pipeline_spark.plans import ddl
+
+    w1, w2 = Warehouse(str(tmp_path / "w1")), Warehouse(str(tmp_path / "w2"))
+    publish_overwrite(_dim_date(spark, 5), w1.path("silver", "dim_date"))
+    spark.range(3).write.parquet(w1.path("gold", "dim_date_view"))
+    publish_overwrite(_dim_date(spark, 9), w2.path("silver", "dim_date"))
+
+    assert ddl.register_warehouse_tables(spark, w1) == ["silver.dim_date", "gold.dim_date_view"]
+    assert spark.table("silver.dim_date").count() == 5
+    assert spark.table("gold.dim_date_view").count() == 5
+
+    ddl.register_warehouse_tables(spark, w2)
+    assert spark.table("silver.dim_date").count() == 9
+    assert spark.table("gold.dim_date_view").count() == 9
 
 
 def test_publish_failure_leaves_old_table_intact(spark, tmp_path):
