@@ -78,16 +78,26 @@ def fan_out(df: DataFrame) -> DataFrame:
     local data): ``df.rdd.getNumPartitions()`` finalizes the AQE plan,
     which materializes upstream exchange stages early, and repartition
     after a join would re-shuffle payloads mid-plan — both measured
-    regressions. Joins, aggregates, windows and explicit repartitions
-    pass through untouched (callers that want their probe side fanned
-    repartition the scan BEFORE the join, where it is still narrow).
+    regressions. Joins, aggregates, windows, dedups and explicit
+    repartitions — any such node of the analyzed plan, found by class
+    name, never by matching column names — pass through untouched
+    (callers that want their probe side fanned repartition the scan
+    BEFORE the join, where it is still narrow).
     """
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     try:
-        plan = df._jdf.queryExecution().analyzed().toString()
-        if any(k in plan for k in ("Join", "Aggregate", "Window", "Repartition")):
-            return df
+        nodes = [df._jdf.queryExecution().analyzed()]
+        while nodes:
+            node = nodes.pop()
+            name = node.nodeName()
+            if name.endswith("Join") or name in (
+                "Aggregate", "Window", "Repartition", "RepartitionByExpression",
+                "Deduplicate", "Distinct",
+            ):
+                return df
+            children = node.children()
+            nodes.extend(children.apply(i) for i in range(children.size()))
         n = df.rdd.getNumPartitions()
     except Exception:  # noqa: BLE001 — unknown lineage: leave untouched
         return df

@@ -1107,6 +1107,7 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
+    from .io import append
     from .streaming import incremental
     from pyspark.sql import types as T
 
@@ -1148,8 +1149,9 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         # update-mode emissions can't go to a file sink directly;
-        # foreachBatch appends each batch's updated rows
-        batch.write.mode("append").parquet(out_dir)
+        # foreachBatch writes each batch's updated rows as its own
+        # partition, so a replayed batch replaces itself
+        append(batch.withColumn("_batch_id", F.lit(batch_id)), out_dir, ["_batch_id"])
 
     with _stream_state_conf(spark):
         (

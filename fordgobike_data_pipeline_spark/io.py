@@ -82,8 +82,11 @@ def _normalize_event_ts(df: DataFrame) -> DataFrame:
 def append(df: DataFrame, path: str, partition_by: list[str]) -> None:
     """Replay-safe batch write (stand-in for COPY, load_bronze.py:81-95):
     a dynamic partition overwrite replaces exactly the partitions in
-    ``df``, so writing batch N again replaces batch N. Unpartitioned, it
-    would replace the whole table, so that is refused."""
+    ``df``, so writing batch N again replaces batch N. An empty ``df``
+    has no partitions and so replaces none: a stale batch N stays, and
+    a table that only ever took empty batches has no file to read a
+    schema from. Unpartitioned, it would replace the whole table, so
+    that is refused."""
     if not partition_by:
         raise ValueError(f"append to {path} needs the batch partition columns")
     (

@@ -26,7 +26,6 @@ projection, and the gap widens with k.
 from __future__ import annotations
 
 import os
-import shutil
 
 import numpy as np
 import pandas as pd
@@ -617,7 +616,8 @@ def build_ivf_index(
 ) -> None:
     """Persist an IVF index: fit the k-means quantizer once, write the
     centroids (bounded control table) and the normalized corpus
-    assignments PARTITIONED BY inverted list.
+    assignments PARTITIONED BY inverted list, then by ``_batch_id``
+    (the build is batch 0; :func:`append_to_ivf_index` adds the rest).
 
     This is the production ANN shape — :func:`ivf_ann_topk` refits and
     rescans per call, which is right for one-shot analytics but wrong
@@ -629,30 +629,44 @@ def build_ivf_index(
     from ..io import publish_overwrite
 
     cent = kmeans_centroids(emb, id_col, vec_col, centroid_mod, kmeans_iters)
+    lists = _ivf_list_rows(emb, cent, 0, id_col, vec_col)
+    publish_overwrite(cent, os.path.join(path, "centroids"))
+    publish_overwrite(
+        lists, os.path.join(path, "lists"), partition_by=["list_id", "_batch_id"]
+    )
+
+
+def _ivf_list_rows(
+    emb: DataFrame, cent: DataFrame, batch_id: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """``emb`` as rows of batch ``batch_id`` of an IVF ``lists`` table:
+    each vector unit-normalized and assigned to its nearest centroid."""
     ids, m = _collect_centers(cent)
     nearest1 = _nearest_centroid_udf(ids, m)
     n_part = emb.sparkSession.sparkContext.defaultParallelism
-    assign = emb.repartition(n_part).select(
+    return emb.repartition(n_part).select(
         F.col(id_col).alias("cand_id"),
         nearest1(F.col(vec_col)).alias("list_id"),
         unit_normalize(F.col(vec_col)).alias("c_vec"),
+        F.lit(batch_id).alias("_batch_id"),
     )
-    publish_overwrite(cent, os.path.join(path, "centroids"))
-    publish_overwrite(assign, os.path.join(path, "lists"), partition_by=["list_id"])
 
 
 def append_to_ivf_index(
     new_emb: DataFrame,
     path: str,
+    batch_id: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
-    """Add a new vector batch to a persisted IVF index WITHOUT refitting
-    or rewriting it: assign the batch with the index's own centroid
-    table (one Arrow matmul pass) and append into the matching
-    ``list_id=`` partition directories — the existing lists are never
-    read, so daily embedding drops stay O(|batch|) however big the
-    index grows (the vector twin of the minhash band-index append).
+    """Add vector batch ``batch_id`` (≥ 1; batch 0 is the build) to a
+    persisted IVF index WITHOUT refitting or rewriting it: assign the
+    batch with the index's own centroid table (one Arrow matmul pass)
+    and write it as the ``_batch_id=N`` partitions of the matching
+    ``list_id=`` directories (:func:`..io.append`) — the existing lists
+    are never read, so daily embedding drops stay O(|batch|) however
+    big the index grows (the vector twin of the minhash band-index
+    append).
 
     The quantizer is deliberately frozen: probing only finds what was
     assigned under the same centroids, and a silent refit would orphan
@@ -660,54 +674,15 @@ def append_to_ivf_index(
     embedding distribution drifts; run io.compact_table (partition-
     preserving) when append files accumulate.
 
-    NOT idempotent under retry: a replayed append writes the batch's
-    rows twice (plain parquet append has no batch key — the list_id
-    directory level is already taken by the partition layout). Run it
-    under an orchestrator's exactly-once task contract, or dedup on
-    cand_id at query time; the streaming curation path shows the
-    batch_id-keyed alternative where replay safety matters.
+    A replay of batch N replaces batch N. A reader that races the write
+    can see some of the batch's list partitions and not others."""
+    from ..io import append
 
-    Reader visibility: the batch is staged to a side directory first,
-    then each finished part file is renamed into its list_id partition
-    — renames are atomic per file, so a concurrent query_ivf_index
-    never reads a HALF-WRITTEN file (the failure plain mode('append')
-    exposes: committed-but-incomplete parts during the write). A
-    reader racing the rename loop can still see a strict subset of the
-    batch's files — fence appends from queries (or re-run the query)
-    where cross-batch read-your-writes consistency matters."""
-    import time as _time
-    import uuid as _uuid
-
-    spark = new_emb.sparkSession
-    cent = spark.read.parquet(os.path.join(path, "centroids"))
-    ids, m = _collect_centers(cent)
-    nearest1 = _nearest_centroid_udf(ids, m)
-    n_part = spark.sparkContext.defaultParallelism
-    assign = new_emb.repartition(n_part).select(
-        F.col(id_col).alias("cand_id"),
-        nearest1(F.col(vec_col)).alias("list_id"),
-        unit_normalize(F.col(vec_col)).alias("c_vec"),
-    )
-    lists_dir = os.path.join(path, "lists")
-    staging = f"{lists_dir}._staging_{int(_time.time() * 1000)}"
-    assign.write.mode("overwrite").partitionBy("list_id").parquet(staging)
-    try:
-        batch_tag = _uuid.uuid4().hex[:12]
-        for part in sorted(os.listdir(staging)):
-            if not part.startswith("list_id="):
-                continue  # _SUCCESS etc.
-            dst_dir = os.path.join(lists_dir, part)
-            os.makedirs(dst_dir, exist_ok=True)
-            src_dir = os.path.join(staging, part)
-            for fname in sorted(os.listdir(src_dir)):
-                if fname.startswith(("_", ".")):
-                    continue
-                os.rename(
-                    os.path.join(src_dir, fname),
-                    os.path.join(dst_dir, f"append-{batch_tag}-{fname}"),
-                )
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    if batch_id < 1:
+        raise ValueError(f"batch_id must be >= 1 (0 is the build), got {batch_id}")
+    cent = new_emb.sparkSession.read.parquet(os.path.join(path, "centroids"))
+    lists = _ivf_list_rows(new_emb, cent, batch_id, id_col, vec_col)
+    append(lists, os.path.join(path, "lists"), ["list_id", "_batch_id"])
 
 
 def query_ivf_index(

@@ -140,16 +140,17 @@ def stream_curate_documents(
     the cross-batch anti-join reads state the stream itself writes —
     the index — and feeds two sinks; the checkpoint replays a batch
     that crashed mid-write, so BOTH sinks are written idempotently:
-    each batch OVERWRITES its own ``batch_id=N`` partition directory
-    (plain appends would double the docs on replay — or, with the
-    write order flipped, silently lose them). A replayed batch also
-    excludes its own partition from the index it dedups against
-    (first-attempt fingerprints would otherwise reject the whole
-    batch and overwrite its data with nothing). Both sinks therefore
-    converge to the same state however many times a batch replays —
-    exactly-once output from at-least-once execution, the standard
-    idempotent-foreachBatch contract. Per-batch cost is
-    O(|batch| + index probe) however large the accepted corpus grows
+    each is an :func:`..io.append` that replaces the batch's own
+    ``batch_id=N`` partition (plain appends would double the docs on
+    replay — or, with the write order flipped, silently lose them). A
+    replayed batch also excludes its own partition from the index it
+    dedups against (first-attempt fingerprints would otherwise reject
+    the whole batch). Both sinks therefore converge to the same state
+    however many times a batch replays — exactly-once output from
+    at-least-once execution — provided a replay of the same
+    micro-batch is deterministic (an empty write replaces no
+    partition, so it would leave the first attempt's rows). Per-batch
+    cost is O(|batch| + index probe) however large the accepted corpus grows
     (operators/dedup.incremental_exact_dedup) — the same contract as
     the batch-mode q_dedup_incremental, now restart-safe and
     file-driven. Readers see ``batch_id`` as a discovered partition
@@ -192,8 +193,9 @@ def _curate_batch(
     :func:`stream_curate_documents`, module-level so replay semantics
     are directly testable). Re-invoking with the same (batch, batch_id)
     converges to the same sink state from ANY intermediate crash
-    point, because every write overwrites the batch's own partition and
-    every index/corpus read excludes it.
+    point, because every sink is an :func:`..io.append` of the batch's
+    own partition and every index/corpus read excludes it (given a
+    deterministic replay: an empty write replaces nothing).
 
     With ``band_index_path`` the batch is additionally NEAR-dedup'd:
     within-batch MinHash-LSH clustering keeps one doc per near-dup
@@ -202,18 +204,21 @@ def _curate_batch(
     rescans archive text, and Jaccard verification re-shingles only
     the matched archive docs, so per-batch cost stays O(|batch| +
     probe) however big the accepted corpus grows. The band index is
-    the third batch_id-partitioned sink, under the same idempotent
-    overwrite contract.
+    the third batch_id-partitioned sink, under the same contract.
 
     ``metrics_path`` adds the observability sink: one tiny per-batch
     accounting row (docs in, past quality, past dedup stages,
-    accepted) under the same batch_id-keyed overwrite contract —
+    accepted) under the same batch_id-keyed contract —
     replay rewrites, never double-counts. Alert on accepted/input
     collapsing (upstream crawl regression) or the dedup share
     spiking (a mirror flood) without scanning the corpus."""
     import os
 
+    from ..io import append
     from ..operators import curation, dedup, text
+
+    def sink(df: DataFrame, path: str) -> None:
+        append(df.withColumn("batch_id", F.lit(batch_id)), path, ["batch_id"])
 
     cleaned = batch.withColumn("text", curation.normalize_text(F.col("text")))
     scored = (
@@ -232,43 +237,32 @@ def _curate_batch(
             batch.sparkSession.read.parquet(index_path)
             # replay: the first attempt may have written this batch's
             # fingerprints already — dedup against OTHER batches only,
-            # or the replay would reject its own docs and overwrite
-            # their partition with an empty one
+            # or the replay would reject its own docs
             .filter(F.col("batch_id") != batch_id)
         )
     else:
         index = dedup.fingerprint_index(kept).limit(0)
-    # funnel counts only when metrics are on: n_in/n_quality re-execute
-    # the normalize + score + semi-join chain, two extra jobs per
-    # micro-batch that a metrics-off deployment shouldn't pay
-    if metrics_path is not None:
-        n_in = batch.count()
-        n_quality = kept.count()
     fresh = dedup.incremental_exact_dedup(kept, index)
     fresh = fresh.localCheckpoint(eager=True)  # one pass, N sinks
-    n_exact = fresh.count()
+    # funnel counts only when metrics are on: each is an extra job per
+    # micro-batch (n_in/n_quality re-execute the normalize + score +
+    # semi-join chain) that a metrics-off deployment shouldn't pay
+    if metrics_path is not None:
+        n_in, n_quality, n_exact = batch.count(), kept.count(), fresh.count()
     if band_index_path is not None:
         fresh = _near_dedup_batch(
             fresh, batch_id, accepted_path, band_index_path, jaccard_threshold
         )
-    fresh.write.mode("overwrite").parquet(
-        os.path.join(accepted_path, f"batch_id={batch_id}")
-    )
-    dedup.fingerprint_index(fresh).write.mode("overwrite").parquet(
-        os.path.join(index_path, f"batch_id={batch_id}")
-    )
+    sink(fresh, accepted_path)
+    sink(dedup.fingerprint_index(fresh), index_path)
     if band_index_path is not None:
-        dedup.minhash_band_index(fresh).write.mode("overwrite").parquet(
-            os.path.join(band_index_path, f"batch_id={batch_id}")
-        )
+        sink(dedup.minhash_band_index(fresh), band_index_path)
     if metrics_path is not None:
-        spark = batch.sparkSession
-        row = [(n_in, n_quality, n_exact, fresh.count())]
-        spark.createDataFrame(
-            row, "n_in BIGINT, n_quality BIGINT, n_exact BIGINT, n_accepted BIGINT"
-        ).write.mode("overwrite").parquet(
-            os.path.join(metrics_path, f"batch_id={batch_id}")
+        row = batch.sparkSession.createDataFrame(
+            [(n_in, n_quality, n_exact, fresh.count())],
+            "n_in BIGINT, n_quality BIGINT, n_exact BIGINT, n_accepted BIGINT",
         )
+        sink(row, metrics_path)
 
 
 def _near_dedup_batch(
@@ -361,17 +355,17 @@ def stream_maintain_mv(
     incrementally, which the plain count/sum algebra cannot do.
 
     Each micro-batch aggregates itself into per-key count/sum/min/max
-    partials, overwrites its own ``_mv_batch=N`` partition under
-    ``partials_path``, then atomically republishes the merged MV from
-    ALL durable partials. Per-refresh cost is O(|batch| + keys×batches)
+    partials, appends them as its own ``_mv_batch=N`` partition of
+    ``partials_path`` (:func:`..io.append`), then atomically
+    republishes the merged MV from ALL durable partials. Per-refresh cost is O(|batch| + keys×batches)
     — the raw history is never rescanned, which is the entire point of
     the partial-merge algebra at 100 TB (the reference instead
     re-runs the full mart query per refresh, gold_ddl.sql:201-244).
 
     Crash contract (same idempotent-foreachBatch shape as
     stream_curate_documents): the partials write converges under
-    replay because it overwrites the batch's own partition; the MV is
-    a pure function of the partials table and is published with the
+    replay because ``io.append`` replaces the batch's own partition
+    (given a deterministic replay, as there); the MV is a pure function of the partials table and is published with the
     atomic version swap, so readers always see a complete MV — at worst
     one batch stale between the partials write and the republish, and
     the replay closes exactly that gap."""
@@ -406,28 +400,21 @@ def _mv_batch(
     """One idempotent MV-maintenance micro-batch (module-level so
     replay semantics are directly testable). The sketch partials (when
     ``distinct_col`` is set) are a second batch-partitioned sink under
-    the same overwrite contract — replay rewrites identical registers
-    (HLL union is order-insensitive), never double-counts."""
-    import os
-
-    from ..io import publish_overwrite
+    the same ``io.append`` contract — replay rewrites identical
+    registers (HLL union is order-insensitive), never double-counts."""
+    from ..io import append, publish_overwrite
     from ..operators import warehouse
 
     keyed = batch.withColumn("_mv_batch", F.lit(batch_id))
-    partials = warehouse.aggregate_partials(
-        keyed, key_cols, value_col, "_mv_batch"
-    ).drop("_mv_batch")
-    partials.write.mode("overwrite").parquet(
-        os.path.join(partials_path, f"_mv_batch={batch_id}")
-    )
+    partials = warehouse.aggregate_partials(keyed, key_cols, value_col, "_mv_batch")
+    append(partials, partials_path, ["_mv_batch"])
     spark = batch.sparkSession
     if distinct_col is not None:
         sketch_root = f"{partials_path}_distinct"
-        warehouse.aggregate_distinct_partials(
+        sketches = warehouse.aggregate_distinct_partials(
             keyed, key_cols, distinct_col, "_mv_batch"
-        ).drop("_mv_batch").write.mode("overwrite").parquet(
-            os.path.join(sketch_root, f"_mv_batch={batch_id}")
         )
+        append(sketches, sketch_root, ["_mv_batch"])
     mv = warehouse.merge_aggregate_partials(
         spark.read.parquet(partials_path), key_cols
     )

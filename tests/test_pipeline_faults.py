@@ -1,6 +1,9 @@
 """Fault injection for the medallion runner: a fault at
 each stage boundary, recovered either by the in-run stage retry or by
 re-firing the batch, must leave the same warehouse as one clean run.
+The streaming ``foreachBatch`` sinks get the same treatment: a fault in
+place of each ``io.append`` of a micro-batch, then the checkpoint's
+replay of that batch.
 
 Faults are injected from outside by wrapping the runner's two writes
 (``runner.append``, ``runner.publish_overwrite``) and the publish swap
@@ -19,6 +22,7 @@ import pytest
 from fordgobike_data_pipeline_spark import io as io_mod
 from fordgobike_data_pipeline_spark.plans import ddl, runner
 from fordgobike_data_pipeline_spark.plans.runner import Warehouse
+from fordgobike_data_pipeline_spark.streaming import incremental
 
 from . import fixtures
 
@@ -218,3 +222,101 @@ def test_publish_over_table_written_in_place(spark, tmp_path):
     assert spark.read.parquet(path).count() == 3
     io_mod.rollback(path, 0)
     assert spark.read.parquet(path).count() == 10
+
+
+# ---------------------------------------------------------------------------
+# Streaming foreachBatch sinks: a fault at any sink write, then the replay
+# ---------------------------------------------------------------------------
+
+DOC_SCHEMA = "doc_id BIGINT, source STRING, text STRING"
+BASE_TEXT = " ".join(f"word{i} token{i} item{i}" for i in range(14))
+DOC_BATCHES = [
+    [(1, "s1", BASE_TEXT)],
+    [(20, "s2", BASE_TEXT + " tail extra"),  # near-dup of doc 1
+     (21, "s2", BASE_TEXT),  # exact dup of doc 1
+     (23, "s2", " ".join(f"unique{i} new{i} thing{i}" for i in range(14)))],
+]
+MV_SCHEMA = "k INT, v DOUBLE, u BIGINT"
+MV_BATCHES = [
+    [(1, 10.0, 101), (1, 20.0, 102), (2, 5.0, 103)],
+    [(1, 40.0, 101), (3, 1.0, 104)],
+]
+
+
+def curate(spark, root: str, batch_id: int) -> None:
+    incremental._curate_batch(
+        spark.createDataFrame(DOC_BATCHES[batch_id], DOC_SCHEMA), batch_id,
+        os.path.join(root, "accepted"), os.path.join(root, "index"), 0.3,
+        band_index_path=os.path.join(root, "band"),
+        metrics_path=os.path.join(root, "metrics"),
+    )
+
+
+def maintain_mv(spark, root: str, batch_id: int) -> None:
+    incremental._mv_batch(
+        spark.createDataFrame(MV_BATCHES[batch_id], MV_SCHEMA), batch_id,
+        os.path.join(root, "partials"), os.path.join(root, "mv"), ["k"], "v",
+        distinct_col="u",
+    )
+
+
+STREAM_BATCHES = {"curate": (curate, 4), "mv": (maintain_mv, 2)}
+
+
+def sink_snapshot(spark, root: str) -> dict:
+    """Every table under ``root`` as its sorted rendered rows (sketch
+    and array columns are not hashable)."""
+    return {
+        name: sorted(str(r) for r in spark.read.parquet(os.path.join(root, name)).collect())
+        for name in sorted(os.listdir(root))
+        if not name.startswith(".")
+    }
+
+
+def count_appends(monkeypatch, fail_at: int | None = None) -> list:
+    """Wrap ``io.append``: record each call, and raise ``Fault`` in place
+    of the ``fail_at``-th write."""
+    real = io_mod.append
+    calls = []
+
+    def append(df, path, partition_by):
+        calls.append(path)
+        if len(calls) == fail_at:
+            raise Fault(f"injected fault at sink write #{fail_at}: {path}")
+        return real(df, path, partition_by)
+
+    monkeypatch.setattr(io_mod, "append", append)
+    return calls
+
+
+@pytest.mark.parametrize("name", sorted(STREAM_BATCHES))
+def test_stream_sink_faults_then_replay_match_clean_run(spark, tmp_path, monkeypatch, name):
+    """A micro-batch that dies at its k-th sink write leaves the sinks
+    written before it holding the batch and the others as they were.
+    The checkpoint replays the batch with the same batch id; the replays
+    die at k = 1, 2, ... in turn, each from the state the last one left,
+    and the final replay with no fault leaves every sink as one clean run."""
+    run, n_sinks = STREAM_BATCHES[name]
+    base, clean, root = (str(tmp_path / d) for d in ("base", "clean", "replayed"))
+    run(spark, base, 0)
+    shutil.copytree(base, clean, symlinks=True)
+    shutil.copytree(base, root, symlinks=True)
+    calls = count_appends(monkeypatch)
+    run(spark, clean, 1)
+    monkeypatch.undo()
+    assert len(calls) == n_sinks  # every sink goes through io.append
+    before, want = sink_snapshot(spark, base), sink_snapshot(spark, clean)
+
+    for fail_at in range(1, n_sinks + 1):
+        calls = count_appends(monkeypatch, fail_at)
+        with pytest.raises(Fault):
+            run(spark, root, 1)
+        monkeypatch.undo()
+        written = {os.path.basename(path) for path in calls[:-1]}
+        got = sink_snapshot(spark, root)
+        assert got == {t: (want if t in written else before)[t] for t in got}
+    run(spark, root, 1)
+    assert sink_snapshot(spark, root) == want
+    if name == "curate":
+        metrics = spark.read.parquet(os.path.join(root, "metrics")).collect()
+        assert sorted(r.batch_id for r in metrics) == [0, 1]

@@ -94,6 +94,22 @@ def test_salted_join_equals_plain_join(spark):
     assert got == want
 
 
+def test_fan_out_leaves_dedup_lineages_untouched(spark):
+    """dropDuplicates/distinct are shuffles: fan_out must not finalize
+    and re-shuffle them."""
+    one = spark.range(0, 20, 1, 1)
+    for df in (one.dropDuplicates(), one.distinct()):
+        assert skew.fan_out(df) is df
+
+
+def test_fan_out_ignores_column_names(spark):
+    """A narrow one-partition frame is fanned out even when a column is
+    named like a plan node."""
+    df = spark.range(0, 20, 1, 1).withColumnRenamed("id", "JoinKey")
+    target = spark.sparkContext.defaultParallelism
+    assert skew.fan_out(df).rdd.getNumPartitions() == target
+
+
 @settings(max_examples=10, deadline=None)
 @given(
     st.lists(

@@ -903,7 +903,7 @@ def test_append_to_ivf_index_matches_inline_under_same_centroids(spark, tmp_path
     first = emb.filter(F.col("vec_id") % 2 == 0)
     rest = emb.filter(F.col("vec_id") % 2 == 1)
     similarity.build_ivf_index(first, path, centroid_mod=25, kmeans_iters=0)
-    similarity.append_to_ivf_index(rest, path)
+    similarity.append_to_ivf_index(rest, path, 1)
 
     queries = emb.filter(F.col("vec_id") < 5)
     got = {
@@ -921,6 +921,33 @@ def test_append_to_ivf_index_matches_inline_under_same_centroids(spark, tmp_path
     # appended rows landed inside the partition layout (pruning intact)
     import os
     assert any(d.startswith("list_id=") for d in os.listdir(f"{path}/lists"))
+
+
+def test_append_to_ivf_index_replay_replaces_its_batch(spark, tmp_path):
+    """Appending the same batch twice leaves it once: the lists hold
+    |build| + |rest| rows and queries answer as after one append. Batch
+    0 is the build and cannot be appended."""
+    emb = _emb(spark)
+    first = emb.filter(F.col("vec_id") % 2 == 0)
+    rest = emb.filter(F.col("vec_id") % 2 == 1)
+    queries = emb.filter(F.col("vec_id") < 5)
+
+    def answer(path):
+        return {
+            (r.query_id, r.rank, r.cand_id, r.sim)
+            for r in similarity.query_ivf_index(spark, path, queries, k=5, nprobe=3).collect()
+        }
+
+    once, twice = str(tmp_path / "once"), str(tmp_path / "twice")
+    for path in (once, twice):
+        similarity.build_ivf_index(first, path, centroid_mod=25, kmeans_iters=0)
+        similarity.append_to_ivf_index(rest, path, 1)
+    similarity.append_to_ivf_index(rest, twice, 1)
+
+    assert spark.read.parquet(f"{twice}/lists").count() == emb.count()
+    assert answer(twice) == answer(once)
+    with pytest.raises(ValueError):
+        similarity.append_to_ivf_index(rest, twice, 0)
 
 
 def test_bigram_lm_flags_shuffled_text(spark):

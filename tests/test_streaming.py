@@ -428,6 +428,28 @@ def test_curate_batch_metrics_sink(spark, tmp_path):
     assert spark.read.parquet(metrics).count() == 1
 
 
+def test_curate_batch_without_metrics_runs_no_count(spark, tmp_path, monkeypatch):
+    """The funnel counts are extra jobs a metrics-off batch must not pay."""
+    good = "the quick brown fox jumps over the lazy dog again and again " * 5
+    b0 = spark.createDataFrame(
+        [(1, "s1", good), (2, "s1", "!!! ??? !!!")],
+        "doc_id BIGINT, source STRING, text STRING",
+    )
+    cls = type(b0)
+    calls = []
+    real = cls.count
+
+    def spy(self):
+        calls.append(self)
+        return real(self)
+
+    monkeypatch.setattr(cls, "count", spy)
+    incremental._curate_batch(
+        b0, 0, str(tmp_path / "accepted"), str(tmp_path / "index"), 0.3
+    )
+    assert calls == []
+
+
 def test_stream_maintain_mv_two_waves_and_replay(spark, tmp_path):
     """Streaming MV maintenance: after each wave the published MV must
     equal the direct aggregation over everything ingested so far, and
