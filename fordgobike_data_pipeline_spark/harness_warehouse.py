@@ -10,8 +10,15 @@ with the scale-grade equivalents; each is oracle-checked end-to-end.
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+from collections.abc import Callable
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from .functions import bloom
 from .harness import query
@@ -37,65 +44,96 @@ def _run_parallel(*thunks) -> None:
             f.result()
 
 
+# State stores per stateful stage: one per shuffle partition, each
+# paying a fixed open/commit cost on every micro-batch. The replays
+# here carry ~1e5 keys, where 32 stores are pure overhead (measured at
+# sf0.1: q_stream_window 12.7s -> 4.2s going 32 -> 8 stores, results
+# identical; the partition count never changes what a stateful
+# aggregation emits).
+_STATE_STORES = "8"
+
+
+@contextmanager
 def _stream_state_conf(spark: SparkSession):
-    """Context manager pinning ``spark.sql.shuffle.partitions`` for a
-    streaming query's lifetime.
+    """Pin ``spark.sql.shuffle.partitions`` to :data:`_STATE_STORES` for
+    a streaming query's lifetime. The count is fixed into the
+    checkpoint at its first run and should track the stateful-key
+    volume, not the session's CPU count."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", _STATE_STORES)
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    Stateful streaming stages key one state store PER shuffle
-    partition at checkpoint creation, and every micro-batch pays a
-    fixed open/commit cost per store — so the right number tracks
-    STATEFUL-KEY VOLUME (and the state backend's throughput), not the
-    session's CPU count. The harness's bounded replays carry ~1e5
-    keys, where 32 stores per stage are pure overhead (measured at
-    sf0.1: q_stream_window 12.7s → 4.2s going 32 → 8 stores, results
-    identical — partition count never changes what a stateful
-    aggregation emits). Production sizes it via
-    SPARK_GRAFT_STREAM_STATE_PARTITIONS (or the session conf at the
-    checkpoint's first run, which pins it for the checkpoint's life).
+
+def _stream_waves(
+    spark: SparkSession,
+    waves: list[DataFrame],
+    run: Callable[[DataFrame, str], DataStreamWriter | StreamingQuery],
+    flush: DataFrame | None = None,
+) -> str:
+    """The landing-and-replay protocol of the streaming keys: land
+    ``waves`` as JSON, stream them back with AvailableNow one wave of
+    files per micro-batch, and return the temp root the sinks wrote
+    under.
+
+    - The waves are written together (:func:`_run_parallel`), each into
+      its own ``wave=N`` directory. ``flush`` (a sentinel row that moves
+      the watermark past every real event) is written strictly AFTER
+      them: the file stream orders micro-batches by modification time,
+      and a sentinel landing first would late-drop the later waves.
+    - The read schema is the first wave's own schema; a key that needs
+      another type casts it in the landed frame.
+    - ``maxFilesPerTrigger`` is one wave's file count: a wave is one
+      file at sf0.1 but ten on the sf1 replica, and a literal 1 there
+      paid the ~1s fixed per-batch cost (state-store open/commit, plan,
+      WAL) once per file (q_stream_stateful: 21s in 20 one-file
+      batches). With no limit every wave collapses into batch 0.
+    - ``run(stream, root)`` returns a ``DataStreamWriter``, which is
+      started here with the checkpoint at ``root/ckpt`` and an
+      AvailableNow trigger, or a finished ``StreamingQuery`` from a
+      library function that owns its trigger (given ``root/ckpt``).
+
+    Concurrent wave writes interleave their files' mtimes, so a
+    micro-batch is one wave's worth of files, not one wave. Every key
+    is arrival-order independent within its watermark; what each needs
+    is state carried across batches, so this raises unless at least
+    two micro-batches read data.
     """
-    import os
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _cm():
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8"),
+    root = tempfile.mkdtemp(prefix="stream_waves_")
+    landing = os.path.join(root, "landing")
+    _run_parallel(*[
+        lambda i=i, w=w: w.write.json(os.path.join(landing, f"wave={i}"))
+        for i, w in enumerate(waves)
+    ])
+    if flush is not None:
+        flush.write.json(os.path.join(landing, "wave=z_flush"))
+    per_wave = max(
+        len(glob.glob(os.path.join(landing, f"wave={i}", "part-*")))
+        for i in range(len(waves))
+    )
+    stream = (
+        spark.readStream.schema(waves[0].schema)
+        .option("maxFilesPerTrigger", per_wave)
+        .json(os.path.join(landing, "*"))
+    )
+    with _stream_state_conf(spark):
+        q = run(stream, root)
+        if isinstance(q, DataStreamWriter):
+            q = (
+                q.option("checkpointLocation", os.path.join(root, "ckpt"))
+                .trigger(availableNow=True)
+                .start()
+            )
+        q.awaitTermination()
+    data_batches = sum(p["numInputRows"] > 0 for p in q.recentProgress)
+    if data_batches < 2:
+        raise RuntimeError(
+            f"{len(waves)} landed waves ran as {data_batches} data micro-batch(es); "
+            "state never carried across batches"
         )
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    return _cm()
-
-
-def _wave_trigger_files(landing: str) -> str:
-    """maxFilesPerTrigger sized to ONE WAVE of the landing directory.
-
-    The landing protocol writes each replay wave with the source's own
-    parallelism, so a wave is one file at sf0.1 but N files at larger
-    inputs (the sf1 replica writes 10 per wave). A literal
-    maxFilesPerTrigger=1 then turns a fixed per-micro-batch cost
-    (state-store open/commit on every store + plan + WAL, ~1s) into
-    files-many batches — profiled at sf1: q_stream_stateful spent 21s
-    running 20 one-file batches of 50k rows. Triggering one wave's
-    file count per batch keeps the batch COUNT at the wave count
-    whatever the scale, which is exactly what the cross-batch
-    state-carry contract needs (>= 2 data batches; the per-key
-    operators are event-time/arrival-order independent within the
-    watermark, and wave-vs-wave arrival order was probed output-
-    invariant in the r13 landing-protocol round)."""
-    import glob
-    import os
-
-    per_wave = [
-        len(glob.glob(os.path.join(d, "part-*")))
-        for d in glob.glob(os.path.join(landing, "wave=*"))
-        if not d.endswith("wave=z_flush")
-    ]
-    return str(max([1] + per_wave))
+    return root
 
 
 # SCD2 history CTEs shared by q_scd2 and the point-in-time consumer
@@ -287,8 +325,6 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (embedded newlines, quotes, unicode) plus lossless id/metadata
     columns — the interchange guarantee an LLM corpus pipeline needs
     before it ships shards between systems."""
-    import tempfile
-
     from pyspark.sql import types as T
 
     from .sources import jsonl
@@ -510,8 +546,6 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit per-doc content hashes; the oracle reads the ORIGINAL
     parquet, so a hash match proves lossless round-trip of text and
     metadata across the format boundary."""
-    import tempfile
-
     docs = load_tables(spark, sf_dir, ("documents",))["documents"].select(
         "doc_id", "text", "lang", "source"
     )
@@ -615,19 +649,15 @@ def q_zorder3(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING materialized view, SQL-adjudicated: the orders table
-    is split into two JSON waves in a landing dir, ingested by
-    streaming.stream_maintain_mv (AvailableNow file stream →
-    per-batch mergeable partials → atomic MV republish), and the
-    published MV is compared against the oracle's DIRECT aggregation
-    over all rows. A hash match proves the full streaming path —
-    micro-batching, per-batch partial state, merge-on-publish — is
-    exactly equivalent to the batch computation, not merely
-    approximately right. (The other streaming entries are
-    integration-tested; this one puts §2.8 under the same oracle gate
-    as the batch operators.)"""
-    import os
-    import tempfile
-
+    lands as two JSON waves (:func:`_stream_waves`), which
+    streaming.stream_maintain_mv ingests as at least two micro-batches
+    (per-batch mergeable partials → atomic MV republish after each),
+    and the published MV is compared against the oracle's DIRECT
+    aggregation over all rows. A hash match proves the full streaming
+    path — micro-batching, partials carried across batches,
+    merge-on-publish — is exactly equivalent to the batch computation,
+    not merely approximately right. (This puts §2.8 under the same
+    oracle gate as the batch operators.)"""
     from .streaming import incremental
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
@@ -636,34 +666,18 @@ def q_stream_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").alias("price"),
         (F.col("o_orderkey") % 2).alias("wave"),
     )
-    root = tempfile.mkdtemp(prefix="stream_mv_q_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-    _run_parallel(*[
-        lambda wv=wv: base.filter(F.col("wave") == wv).drop("wave").write.mode(
-            "overwrite"
-        ).json(os.path.join(landing, f"wave={wv}"))
-        for wv in (0, 1)
-    ])
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("prio", T.StringType()),
-            T.StructField("price", T.DoubleType()),
-        ]
-    )
-    with _stream_state_conf(spark):
-        incremental.stream_maintain_mv(
-            spark,
-            os.path.join(landing, "*", ""),
+    root = _stream_waves(
+        spark,
+        [base.filter(F.col("wave") == wv).drop("wave") for wv in (0, 1)],
+        lambda stream, root: incremental.stream_maintain_mv(
+            stream,
             os.path.join(root, "partials"),
             os.path.join(root, "mv"),
             os.path.join(root, "ckpt"),
             ["prio"],
             "price",
-            schema=schema,
-        )
+        ),
+    )
     return spark.read.parquet(os.path.join(root, "mv"))
 
 
@@ -687,54 +701,31 @@ def q_stream_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING CDC snapshot, SQL-adjudicated (the stream twin of
-    q_cdc_apply, same oracle): the synthesized changelog splits into
-    two JSON waves, streams through stream_apply_changelog's
-    compacted-topic state (latest row per key INCLUDING tombstones),
-    and the published snapshot must hash-match compacting the full
-    history in one batch — pinning that per-batch latest-wins over
-    tombstone-retaining state is exactly history-order-invariant."""
-    import os
-    import tempfile
-
-    from pyspark.sql import types as T
-
+    q_cdc_apply, same oracle): the synthesized changelog lands as two
+    JSON waves (:func:`_stream_waves`), streams through
+    stream_apply_changelog's compacted-topic state (latest row per key
+    INCLUDING tombstones) in at least two micro-batches, and the
+    published snapshot must hash-match compacting the full history in
+    one batch — pinning that per-batch latest-wins over the state
+    carried from the earlier batch is exactly history-order-invariant."""
     from .streaming import incremental
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"]
     changes = orders.select(
         F.col("o_custkey").alias("cust_id"),
-        F.col("o_orderdate").alias("ts"),
+        F.col("o_orderdate").cast("date").alias("ts"),
         F.col("o_orderkey").alias("tb"),
         F.when(F.col("o_orderkey") % 7 == 0, F.lit("delete"))
         .otherwise(F.lit("upsert"))
         .alias("op"),
         F.col("o_orderstatus").alias("status"),
         F.col("o_totalprice").alias("total"),
-        (F.col("o_orderkey") % 2).alias("wave"),
     )
-    root = tempfile.mkdtemp(prefix="stream_cdc_q_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-    _run_parallel(*[
-        lambda wv=wv: changes.filter(F.col("wave") == wv).drop("wave").write.mode(
-            "overwrite"
-        ).json(os.path.join(landing, f"wave={wv}"))
-        for wv in (0, 1)
-    ])
-    schema = T.StructType(
-        [
-            T.StructField("cust_id", T.LongType()),
-            T.StructField("ts", T.DateType()),
-            T.StructField("tb", T.LongType()),
-            T.StructField("op", T.StringType()),
-            T.StructField("status", T.StringType()),
-            T.StructField("total", T.DoubleType()),
-        ]
-    )
-    with _stream_state_conf(spark):
-        incremental.stream_apply_changelog(
-            spark,
-            os.path.join(landing, "*", ""),
+    root = _stream_waves(
+        spark,
+        [changes.filter(F.col("tb") % 2 == wv) for wv in (0, 1)],
+        lambda stream, root: incremental.stream_apply_changelog(
+            stream,
             os.path.join(root, "state"),
             os.path.join(root, "snap"),
             os.path.join(root, "ckpt"),
@@ -742,8 +733,8 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ts",
             "op",
             ["tb"],
-            schema,
-        )
+        ),
+    )
     return spark.read.parquet(os.path.join(root, "snap"))
 
 
@@ -763,8 +754,6 @@ def q_file_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data (and the single-file-per-partition layout the
     hash-repartitioned write promises: each lang lives in exactly one
     shuffle partition, so exactly one file)."""
-    import tempfile
-
     from .sources import parquet_meta
 
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
@@ -905,9 +894,6 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval join over the same events, so the hash match certifies
     the streaming join emitted exactly the batch-semantics result (no
     dropped late matches, no duplicates across micro-batches)."""
-    import os
-    import tempfile
-
     from .streaming import incremental
 
     ev = load_tables(spark, sf_dir, ("events",))["events"]
@@ -1013,64 +999,31 @@ def q_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING exact dedup under a watermark, SQL-adjudicated (the
     q_stream_mv discipline applied to streaming.deduped_stream): the
-    events table is written to a landing dir as two JSON waves — the
+    events table lands as two JSON waves (:func:`_stream_waves`) — the
     full table, then a re-delivery of every third event (the at-least-
     once duplicate storm a file/queue source produces) — streamed back
-    with AvailableNow, deduped by event_id with a 1-hour watermark
-    bounding the state store, and the surviving rows aggregated. The
-    oracle aggregates the ORIGINAL table directly: a hash match proves
-    watermarked streaming dedup ≡ batch distinct, whether the
-    re-delivered wave lands in the same micro-batch (in-batch state
-    hit) or a later one (cross-batch state hit or late-drop beyond the
-    watermark — every path converges to the same rows)."""
-    import os
-    import tempfile
-
+    in at least two micro-batches, deduped by event_id with a 1-hour
+    watermark bounding the state store, and the surviving rows
+    aggregated. The oracle aggregates the ORIGINAL table directly: a
+    hash match proves watermarked streaming dedup ≡ batch distinct,
+    whether a re-delivered event meets its original in the same
+    micro-batch (in-batch state hit) or a later one (cross-batch state
+    hit or late-drop beyond the watermark — every path converges to
+    the same rows)."""
     from .streaming import incremental
-    from pyspark.sql import types as T
 
     ev = load_tables(spark, sf_dir, ("events",))["events"].select(
         "event_id", "ts", "event_type", "value"
     )
-    root = tempfile.mkdtemp(prefix="stream_dedup_q_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-    _run_parallel(
-        lambda: ev.write.mode("overwrite").json(os.path.join(landing, "wave=0")),
-        lambda: ev.filter(F.col("event_id") % 3 == 0).write.mode("overwrite").json(
-            os.path.join(landing, "wave=1")
-        ),
+    root = _stream_waves(
+        spark,
+        [ev, ev.filter(F.col("event_id") % 3 == 0)],
+        lambda stream, root: incremental.deduped_stream(stream, watermark="1 hour")
+        .writeStream.format("parquet")
+        .option("path", os.path.join(root, "deduped")),
     )
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    # one file per micro-batch so the re-delivery wave arrives in a
-    # LATER batch than the original — exercising the cross-batch
-    # dedup-state (or late-drop) path, not just in-batch dedup
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.json")
-        .option("maxFilesPerTrigger", "1")
-        .json(os.path.join(landing, "*"))
-    )
-    deduped = incremental.deduped_stream(stream, watermark="1 hour")
-    out_dir = os.path.join(root, "deduped")
-    with _stream_state_conf(spark):
-        (
-            deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
     return (
-        spark.read.parquet(out_dir)
+        spark.read.parquet(os.path.join(root, "deduped"))
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -1090,26 +1043,20 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSTOM STATEFUL streaming operator, SQL-adjudicated: per-user
-    running totals via applyInPandasWithState (Arrow-batched per-key
-    state surviving across micro-batches), fed two JSON waves split
-    by event_id so state MUST carry across batches (two batches fully
-    exercise the state.exists restore path; the third wave added only
-    another ~1.1s of fixed per-micro-batch cost — open/commit on every
-    state store + plan + WAL — for identical output, A/B 3.7 -> 2.7s). The state
-    accumulates exact integer cents (stateful_user_sums_exact) —
-    order-independent no matter how rows shuffle into batches. Update
-    mode emits a row per user per batch; the final state per user is
-    recovered as max(struct(n_events, sum_cents)) — counts only grow —
-    and hash-compared to the batch groupBy of the original table,
-    putting the applyInPandasWithState path under the same oracle gate
-    as q_stream_mv/q_stream_dedup."""
-    import os
-    import tempfile
-
+    """STATEFUL streaming running totals, SQL-adjudicated: per-user
+    (count, exact integer cents) kept by Spark's built-in streaming
+    aggregation in UPDATE mode, so the state lives in the JVM state
+    store and carries across micro-batches. Two JSON waves split by
+    event_id (:func:`_stream_waves`) run as at least two micro-batches,
+    so a user's second-batch row must add to the total restored from
+    the first. (Two batches fully exercise the restore path; a third
+    wave added only ~1.1s of fixed per-batch cost for identical
+    output.) Update mode emits a row per user per batch; the final
+    total per user is recovered as max(struct(n_events, sum_cents)) —
+    counts only grow — and hash-compared to the batch groupBy of the
+    original table. The pandas-state template for shapes built-ins
+    cannot express is streaming.stateful_user_totals."""
     from .io import append
-    from .streaming import incremental
-    from pyspark.sql import types as T
 
     ev = load_tables(spark, sf_dir, ("events",))["events"].select(
         "event_id",
@@ -1117,53 +1064,28 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         F.round(F.col("value") * 100).cast("long").alias("value_cents"),
     )
-    root = tempfile.mkdtemp(prefix="stream_stateful_q_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
-    _run_parallel(*[
-        lambda wv=wv: ev.filter(F.col("event_id") % 2 == wv).write.mode(
-            "overwrite"
-        ).json(os.path.join(landing, f"wave={wv}"))
-        for wv in (0, 1)
-    ])
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("value_cents", T.LongType()),
-        ]
-    )
-    # one WAVE of files per micro-batch (_wave_trigger_files): the
-    # waves MUST land in separate batches so the state.exists restore
-    # path actually runs — with no limit all waves collapse into batch
-    # 0 and cross-batch state carry-over goes unexercised; with a
-    # literal 1 a multi-file wave (sf1: 10 files/wave) pays the fixed
-    # per-batch cost once PER FILE instead of once per wave
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", _wave_trigger_files(landing))
-        .json(os.path.join(landing, "*"))
-    )
-    out_dir = os.path.join(root, "totals")
 
-    def _sink(batch: DataFrame, batch_id: int) -> None:
-        # update-mode emissions can't go to a file sink directly;
-        # foreachBatch writes each batch's updated rows as its own
-        # partition, so a replayed batch replaces itself
-        append(batch.withColumn("_batch_id", F.lit(batch_id)), out_dir, ["_batch_id"])
+    def run(stream: DataFrame, root: str) -> DataStreamWriter:
+        def sink(batch: DataFrame, batch_id: int) -> None:
+            # update-mode emissions can't go to a file sink directly;
+            # each batch's updated rows are their own partition, so a
+            # replayed batch replaces itself
+            append(
+                batch.withColumn("_batch_id", F.lit(batch_id)),
+                os.path.join(root, "totals"),
+                ["_batch_id"],
+            )
 
-    with _stream_state_conf(spark):
-        (
-            incremental.stateful_user_sums_exact(stream)
-            .writeStream.foreachBatch(_sink)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+        totals = stream.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("value_cents").alias("sum_cents"),
         )
-    emitted = spark.read.parquet(out_dir)
+        return totals.writeStream.foreachBatch(sink).outputMode("update")
+
+    root = _stream_waves(
+        spark, [ev.filter(F.col("event_id") % 2 == wv) for wv in (0, 1)], run
+    )
+    emitted = spark.read.parquet(os.path.join(root, "totals"))
     final = emitted.groupBy("user_id").agg(
         F.max(F.struct("n_events", "sum_cents")).alias("s")
     )
@@ -1199,24 +1121,21 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING native session windows, SQL-adjudicated: events
-    stream in as per-wave JSON files, F.session_window(ts, 30 min)
-    aggregates under a 1-hour watermark in APPEND mode (sessions emit
-    only when the watermark passes their close — the production path,
-    with state eviction). Append mode leaves the newest sessions open
-    forever on bounded input, so the landing gets a FLUSH SENTINEL —
-    one dummy event 10 hours past the data's horizon — which advances
-    the global watermark past every real session's close; the final
+    stream in as two JSON waves (:func:`_stream_waves`),
+    F.session_window(ts, 30 min) aggregates under a 1-hour watermark
+    in APPEND mode (sessions emit only when the watermark passes their
+    close — the production path, with state eviction). Append mode
+    leaves the newest sessions open forever on bounded input, so the
+    landing gets a FLUSH SENTINEL — one dummy event 10 hours past the
+    data's horizon — which advances the global watermark past every
+    real session's close; the final
     no-data micro-batch then emits them all and only the sentinel's
     own session stays in state. The oracle is the batch gap-formulation
     with NATIVE semantics (a gap of exactly 30:00 starts a NEW session
     — `>=`, unlike q_sessionize's `>` — and end = last event + gap).
     Hash parity proves watermark + merge-on-arrival streaming sessions
     ≡ batch sessionization."""
-    import os
-    import tempfile
-
     from .operators import sessions as sess_ops
-    from pyspark.sql import types as T
 
     # ts ships as epoch MICROS (long): Spark's JSON timestamp format
     # truncates to milliseconds, which would shift session bounds
@@ -1224,65 +1143,36 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", F.unix_micros("ts").alias("ts_us")
     )
     horizon_us = ev.agg(F.max("ts_us").alias("m")).collect()[0].m
-    root = tempfile.mkdtemp(prefix="stream_session_q_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
     # sentinel built JVM-side as a single-partition range: the former
     # createDataFrame([...]) parallelized 1 row over defaultParallelism
     # Python partitions and the coalesce(1) then evaluated all 32
     # Python-worker roundtrips SERIALLY inside one task — profiled
     # ~4.5s for a 1-row JSON write at sf0.1. range(1) is one JVM
-    # partition (one file -> one micro-batch under maxFilesPerTrigger=1)
-    # and the emitted JSON is byte-identical.
+    # partition, so one file, and the emitted JSON is byte-identical.
     flush = spark.range(0, 1, 1, 1).select(
         F.lit(-1).cast("long").alias("event_id"),
         F.lit(-1).cast("long").alias("user_id"),
         F.lit(horizon_us + 10 * 3600 * 1_000_000).cast("long").alias("ts_us"),
     )
-    _run_parallel(*[
-        lambda wv=wv: ev.filter(F.col("event_id") % 2 == wv).write.mode(
-            "overwrite"
-        ).json(os.path.join(landing, f"wave={wv}"))
-        for wv in (0, 1)
-    ])
-    # the sentinel is written strictly AFTER the waves: the file stream
-    # orders micro-batches by modification time, and a sentinel landing
-    # first would advance the watermark past the horizon and late-drop
-    # every real event in the later wave
-    flush.write.mode("overwrite").json(os.path.join(landing, "wave=z_flush"))
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        # one wave of files per micro-batch (see _wave_trigger_files);
-        # the sentinel's mtime sorts after every wave file, so it still
-        # arrives in the LAST data batch and the watermark only crosses
+
+    def run(stream: DataFrame, root: str) -> DataStreamWriter:
+        # the sentinel's mtime sorts after every wave file, so it
+        # arrives in the last data batch and the watermark only crosses
         # the horizon after all real events are in
-        .option("maxFilesPerTrigger", _wave_trigger_files(landing))
-        .json(os.path.join(landing, "*"))
-        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-    )
-    sessions = sess_ops.session_windows_native(
-        stream.withWatermark("ts", "1 hour"), gap="30 minutes"
-    )
-    out_dir = os.path.join(root, "sessions")
-    with _stream_state_conf(spark):
-        (
-            sessions.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+        sessions = sess_ops.session_windows_native(
+            stream.withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+            .withWatermark("ts", "1 hour"),
+            gap="30 minutes",
         )
+        return sessions.writeStream.format("parquet").option(
+            "path", os.path.join(root, "sessions")
+        )
+
+    root = _stream_waves(
+        spark, [ev.filter(F.col("event_id") % 2 == wv) for wv in (0, 1)], run, flush
+    )
     return (
-        spark.read.parquet(out_dir)
+        spark.read.parquet(os.path.join(root, "sessions"))
         .filter(F.col("user_id") >= 0)
         .select("user_id", "session_start", "session_end", "n_events")
     )
@@ -1308,77 +1198,45 @@ def q_stream_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSON's millisecond truncation; value totals are exact integer
     cents. The oracle is the batch time_bucket aggregation — hash
     parity proves exactly-once window emission ≡ batch bucketing."""
-    import os
-    import tempfile
-
-    from pyspark.sql import types as T
-
     ev = load_tables(spark, sf_dir, ("events",))["events"].select(
         "event_id",
         F.unix_micros("ts").alias("ts_us"),
         F.round(F.col("value") * 100).cast("long").alias("value_cents"),
     )
     horizon_us = ev.agg(F.max("ts_us").alias("m")).collect()[0].m
-    root = tempfile.mkdtemp(prefix="stream_window_q_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
     # sentinel built JVM-side as a single-partition range — see
     # q_stream_session for the profiled createDataFrame+coalesce(1)
-    # trap this replaces (one file -> one micro-batch either way)
+    # trap this replaces
     flush = spark.range(0, 1, 1, 1).select(
         F.lit(-1).cast("long").alias("event_id"),
         F.lit(horizon_us + 10 * 3600 * 1_000_000).cast("long").alias("ts_us"),
         F.lit(0).cast("long").alias("value_cents"),
     )
-    _run_parallel(*[
-        lambda wv=wv: ev.filter(F.col("event_id") % 2 == wv).write.mode(
-            "overwrite"
-        ).json(os.path.join(landing, f"wave={wv}"))
-        for wv in (0, 1)
-    ])
-    # the sentinel is written strictly AFTER the waves: the file stream
-    # orders micro-batches by modification time, and a sentinel landing
-    # first would advance the watermark past the horizon and late-drop
-    # every real event in the later wave
-    flush.write.mode("overwrite").json(os.path.join(landing, "wave=z_flush"))
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-            T.StructField("value_cents", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        # one wave of files per micro-batch (see _wave_trigger_files)
-        .option("maxFilesPerTrigger", _wave_trigger_files(landing))
-        .json(os.path.join(landing, "*"))
-        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+
+    def run(stream: DataFrame, root: str) -> DataStreamWriter:
         # the sentinel flows THROUGH the watermark (filtering it here
         # would leave the last real windows unflushed); its own window
         # never closes, so it never reaches the append sink
-    )
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum("value_cents").alias("sum_cents"),
+        agg = (
+            stream.withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+            .withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.sum("value_cents").alias("sum_cents"),
+            )
+            .select(F.col("w.start").alias("bucket_start"), "cnt", "sum_cents")
         )
-        .select(F.col("w.start").alias("bucket_start"), "cnt", "sum_cents")
-    )
-    out_dir = os.path.join(root, "windows")
-    with _stream_state_conf(spark):
-        (
-            agg.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+        return agg.writeStream.format("parquet").option(
+            "path", os.path.join(root, "windows")
         )
-    return spark.read.parquet(out_dir).select("bucket_start", "cnt", "sum_cents")
+
+    root = _stream_waves(
+        spark, [ev.filter(F.col("event_id") % 2 == wv) for wv in (0, 1)], run, flush
+    )
+    return spark.read.parquet(os.path.join(root, "windows")).select(
+        "bucket_start", "cnt", "sum_cents"
+    )
 
 
 @query(
@@ -1400,64 +1258,34 @@ def q_stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dropDuplicatesWithinWatermark`` on event_id emits each event
     exactly once while evicting dedup state as the watermark passes —
     the production alternative to an unbounded dropDuplicates whose
-    state grows forever. maxFilesPerTrigger=1 forces the duplicate
-    wave through a LATER micro-batch, so the cross-batch dedup state
-    path is what's exercised (same-batch dedup would pass trivially).
+    state grows forever. :func:`_stream_waves` runs the two waves as
+    at least two micro-batches, so the cross-batch dedup state path is
+    what's exercised (same-batch dedup would pass trivially).
     No flush sentinel needed: the dedup filter is append-emitting (a
     first occurrence emits immediately; only the suppression state
     waits on the watermark). Timestamps ship as epoch micros around
     JSON's millisecond truncation. The oracle is the plain event set —
     hash parity proves streaming redelivery dedup ≡ exactly-once."""
-    import os
-    import tempfile
-
-    from pyspark.sql import types as T
-
     ev = load_tables(spark, sf_dir, ("events",))["events"].select(
         "event_id", "user_id", "event_type", F.unix_micros("ts").alias("ts_us")
     )
-    root = tempfile.mkdtemp(prefix="stream_dedup_q_")
-    landing = os.path.join(root, "landing")
-    os.makedirs(landing)
+
+    def run(stream: DataFrame, root: str) -> DataStreamWriter:
+        # delay > the feed's 30-day span: every redelivery is within the
+        # watermark, so nothing is late-dropped; in production the delay
+        # is the transport's replay horizon and state evicts behind it
+        deduped = (
+            stream.withColumn("ts", F.timestamp_micros(F.col("ts_us")))
+            .withWatermark("ts", "45 days")
+            .dropDuplicatesWithinWatermark(["event_id"])
+        )
+        return deduped.writeStream.format("parquet").option(
+            "path", os.path.join(root, "deduped")
+        )
+
     # wave 1 = the byte-identical redelivery
-    _run_parallel(*[
-        lambda wv=wv: ev.write.mode("overwrite").json(
-            os.path.join(landing, f"wave={wv}")
-        )
-        for wv in (0, 1)
-    ])
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts_us", T.LongType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .json(os.path.join(landing, "*"))
-        .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-    )
-    # delay > the feed's 30-day span: every redelivery is within the
-    # watermark, so nothing is late-dropped; in production the delay is
-    # the transport's replay horizon and state evicts behind it
-    deduped = stream.withWatermark("ts", "45 days").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    out_dir = os.path.join(root, "deduped")
-    with _stream_state_conf(spark):
-        (
-            deduped.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    return spark.read.parquet(out_dir).select(
+    root = _stream_waves(spark, [ev, ev], run)
+    return spark.read.parquet(os.path.join(root, "deduped")).select(
         "event_id", "user_id", "event_type", "ts_us"
     )
 
@@ -1489,9 +1317,6 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, invented no values, and NULLed exactly the old shard.
     At scale mergeSchema costs one footer read per file — the report
     itself is one aggregate."""
-    import os
-    import tempfile
-
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     root = tempfile.mkdtemp(prefix="schema_evo_")
     old = os.path.join(root, "v1")

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..schemas import TRIPS_RAW
@@ -311,7 +312,11 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     and restarts — state lives in the checkpoint, Arrow-batched per
     group. The template for operators Spark's built-in aggregations
     can't express (custom accumulators, decay windows, per-key models).
-    Emits one updated row per user per batch (update output mode)."""
+    Emits one updated row per user per batch (update output mode).
+
+    This is the package's one pandas-state operator, kept off the timed
+    keys: plain running totals are a built-in streaming aggregation,
+    whose state stays in the JVM (q_stream_stateful)."""
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -336,19 +341,17 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
 
 
 def stream_maintain_mv(
-    spark: SparkSession,
-    landing_dir: str,
+    stream: DataFrame,
     partials_path: str,
     mv_path: str,
     checkpoint_dir: str,
     key_cols: list[str],
     value_col: str,
-    schema: StructType | None = None,
     distinct_col: str | None = None,
-) -> None:
+) -> StreamingQuery:
     """Streaming materialized-view maintenance: the SAME mergeable
     algebra as the batch q_mv_merge path (warehouse.aggregate_partials
-    / merge_aggregate_partials), driven by a file stream. With
+    / merge_aggregate_partials), driven by a stream. With
     ``distinct_col``, per-batch HLL sketches ride alongside the numeric
     partials (warehouse.aggregate_distinct_partials) and the MV gains
     an ``approx_distinct`` column — COUNT(DISTINCT) maintained
@@ -368,10 +371,10 @@ def stream_maintain_mv(
     (given a deterministic replay, as there); the MV is a pure function of the partials table and is published with the
     atomic version swap, so readers always see a complete MV — at worst
     one batch stale between the partials write and the republish, and
-    the replay closes exactly that gap."""
-    if schema is None:
-        schema = StructType.fromDDL("k INT, v DOUBLE")
-    stream = spark.readStream.schema(schema).json(landing_dir)
+    the replay closes exactly that gap.
+
+    ``stream`` is the change feed (a streaming DataFrame); the query
+    runs with an AvailableNow trigger and is returned finished."""
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         _mv_batch(
@@ -386,6 +389,7 @@ def stream_maintain_mv(
         .start()
     )
     q.awaitTermination()
+    return q
 
 
 def _mv_batch(
@@ -434,8 +438,7 @@ def _mv_batch(
 
 
 def stream_apply_changelog(
-    spark: SparkSession,
-    landing_dir: str,
+    stream: DataFrame,
     state_path: str,
     snapshot_path: str,
     checkpoint_dir: str,
@@ -443,9 +446,8 @@ def stream_apply_changelog(
     ts_col: str,
     op_col: str,
     tiebreak_cols: list[str],
-    schema: StructType,
     delete_op: str = "delete",
-) -> None:
+) -> StreamingQuery:
     """Streaming CDC snapshot maintenance — the stream form of
     warehouse.apply_changelog, same state design as a Kafka compacted
     topic: the durable STATE keeps one latest row per key INCLUDING
@@ -469,8 +471,10 @@ def stream_apply_changelog(
     contract: latest_wins(state' ∪ B) = state' — replaying a batch
     already folded into state is a no-op — and both writes go through
     the atomic version swap, so readers never see a torn state or snapshot.
+
+    ``stream`` is the changelog (a streaming DataFrame); the query runs
+    with an AvailableNow trigger and is returned finished.
     """
-    stream = spark.readStream.schema(schema).json(landing_dir)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
         _cdc_batch(
@@ -485,6 +489,7 @@ def stream_apply_changelog(
         .start()
     )
     q.awaitTermination()
+    return q
 
 
 def _cdc_batch(
@@ -525,34 +530,4 @@ def _cdc_batch(
     publish_overwrite(state, state_path)
     publish_overwrite(
         state.filter(F.col(op_col) != delete_op).drop(op_col), snapshot_path
-    )
-
-
-def stateful_user_sums_exact(events: DataFrame) -> DataFrame:
-    """stateful_user_totals with EXACT integer accumulation: the state
-    carries (count, value CENTS) as BIGINTs, so the running total is
-    order-independent across micro-batches, shuffle orders, and
-    restarts — the variant whose final state can be hash-compared to a
-    batch aggregation (doubles in state would drift with partition
-    order). Input needs a ``value_cents`` BIGINT column."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update_totals(key, pdf_iter, state):
-        (user_id,) = key
-        cnt, cents = state.get if state.exists else (0, 0)
-        for pdf in pdf_iter:
-            cnt += len(pdf)
-            cents += int(pdf["value_cents"].sum())
-        state.update((cnt, cents))
-        yield pd.DataFrame(
-            {"user_id": [user_id], "n_events": [cnt], "sum_cents": [cents]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update_totals,
-        outputStructType="user_id BIGINT, n_events BIGINT, sum_cents BIGINT",
-        stateStructType="cnt BIGINT, cents BIGINT",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -1,9 +1,8 @@
 """Focused pins for the r13 optimization-round internals.
 
 Each test pins a behavior an optimization changed or explicitly
-preserved: the narrow (explode-free) SimHash signature build, the
-single-reference symmetric edge build in connected_components, and the
-wave-sized streaming trigger helper.
+preserved: the narrow (explode-free) SimHash signature build and the
+single-reference symmetric edge build in connected_components.
 """
 
 from __future__ import annotations
@@ -75,21 +74,3 @@ def test_connected_components_edge_build_symmetric(spark):
     )
     comp = {r.node: r.component for r in dedup.connected_components(pairs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20}
-
-
-def test_wave_trigger_files_counts_one_wave(tmp_path):
-    """maxFilesPerTrigger helper: max per-wave part-file count, the
-    flush-sentinel dir excluded, floor of 1 on an empty landing."""
-    from fordgobike_data_pipeline_spark.harness_warehouse import _wave_trigger_files
-
-    landing = tmp_path / "landing"
-    (landing / "wave=0").mkdir(parents=True)
-    (landing / "wave=1").mkdir()
-    (landing / "wave=z_flush").mkdir()
-    for i in range(3):
-        (landing / "wave=0" / f"part-{i:05d}.json").write_text("{}")
-    (landing / "wave=1" / "part-00000.json").write_text("{}")
-    for i in range(9):  # sentinel dir must not inflate the trigger
-        (landing / "wave=z_flush" / f"part-{i:05d}.json").write_text("{}")
-    assert _wave_trigger_files(str(landing)) == "3"
-    assert _wave_trigger_files(str(tmp_path / "nowhere")) == "1"

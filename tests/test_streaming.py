@@ -1,11 +1,18 @@
 """Structured Streaming tests: AvailableNow incremental ingest with
 exactly-once checkpointing, watermark windowed aggregation parity with
-the batch twin, streaming dedup, and the native session_window."""
+the batch twin, streaming dedup, the native session_window, and the
+streaming q_* keys with their landing-and-replay protocol."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import os
 
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
+
+from fordgobike_data_pipeline_spark import harness
+from fordgobike_data_pipeline_spark.harness_warehouse import _stream_waves
 from fordgobike_data_pipeline_spark.io import load_tables
 from fordgobike_data_pipeline_spark.operators import sessions
 from fordgobike_data_pipeline_spark.streaming import incremental
@@ -477,14 +484,16 @@ def test_stream_maintain_mv_two_waves_and_replay(spark, tmp_path):
     wave1 = [(1, 10.0), (1, 20.0), (2, 5.0)]
     write_wave("w1", wave1)
     incremental.stream_maintain_mv(
-        spark, landing, partials, mv, ckpt, ["k"], "v"
+        spark.readStream.schema("k INT, v DOUBLE").json(landing),
+        partials, mv, ckpt, ["k"], "v",
     )
     assert mv_state() == {1: (2, 30.0, 10.0, 20.0), 2: (1, 5.0, 5.0, 5.0)}
 
     wave2 = [(1, 40.0), (3, 7.0)]
     write_wave("w2", wave2)
     incremental.stream_maintain_mv(
-        spark, landing, partials, mv, ckpt, ["k"], "v"
+        spark.readStream.schema("k INT, v DOUBLE").json(landing),
+        partials, mv, ckpt, ["k"], "v",
     )
     want = {1: (3, 70.0, 10.0, 40.0), 2: (1, 5.0, 5.0, 5.0), 3: (1, 7.0, 7.0, 7.0)}
     assert mv_state() == want
@@ -522,13 +531,13 @@ def test_stream_maintain_mv_with_distinct_sketches(spark, tmp_path):
     # per-batch distincts would double-count it; sketch union must not
     write_wave("w1", [(1, 10.0, 101), (1, 20.0, 102), (2, 5.0, 103)])
     incremental.stream_maintain_mv(
-        spark, landing, partials, mv, ckpt, ["k"], "v",
-        schema=schema, distinct_col="u",
+        spark.readStream.schema(schema).json(landing),
+        partials, mv, ckpt, ["k"], "v", distinct_col="u",
     )
     write_wave("w2", [(1, 40.0, 101), (1, 1.0, 104)])
     incremental.stream_maintain_mv(
-        spark, landing, partials, mv, ckpt, ["k"], "v",
-        schema=schema, distinct_col="u",
+        spark.readStream.schema(schema).json(landing),
+        partials, mv, ckpt, ["k"], "v", distinct_col="u",
     )
     state = {r.k: (r.n_rows, r.approx_distinct) for r in spark.read.parquet(mv).collect()}
     assert state == {1: (4, 3), 2: (1, 1)}
@@ -567,7 +576,8 @@ def test_stream_apply_changelog_tombstones_and_replay(spark, tmp_path):
 
     def run():
         incremental.stream_apply_changelog(
-            spark, landing, state, snap, ckpt, ["k"], "ts", "op", ["tb"], schema
+            spark.readStream.schema(schema).json(landing),
+            state, snap, ckpt, ["k"], "ts", "op", ["tb"],
         )
 
     def snapshot():
@@ -600,3 +610,193 @@ def test_stream_apply_changelog_tombstones_and_replay(spark, tmp_path):
     assert snapshot() == {"a": "a2", "c": "c1"}
     incremental._cdc_batch(b3, state, snap, ["k"], "ts", "op", ["tb"])
     assert snapshot() == {"a": "a2", "c": "c1"}
+
+
+def test_stream_dedup_matches_batch_distinct(spark):
+    agg = {
+        r.event_type: r.n_events
+        for r in harness.all_queries()["q_stream_dedup"](spark, SF_SMOKE).collect()
+    }
+    from fordgobike_data_pipeline_spark.io import load_tables
+
+    ev = load_tables(spark, SF_SMOKE, ("events",))["events"]
+    expected = {
+        r.event_type: r.n
+        for r in ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert agg == expected
+
+
+def test_stream_session_matches_batch_native(spark):
+    """Streaming session_window (append + flush sentinel) must emit
+    exactly the batch-native session set."""
+    from fordgobike_data_pipeline_spark.io import load_tables
+    from fordgobike_data_pipeline_spark.operators import sessions as sess_ops
+
+    got = {
+        (r.user_id, r.session_start, r.session_end, r.n_events)
+        for r in harness.all_queries()["q_stream_session"](spark, SF_SMOKE).collect()
+    }
+    ev = load_tables(spark, SF_SMOKE, ("events",))["events"]
+    want = {
+        (r.user_id, r.session_start, r.session_end, r.n_events)
+        for r in sess_ops.session_windows_native(ev, gap="30 minutes").collect()
+    }
+    assert got == want
+
+
+def test_stream_window_matches_batch_buckets(spark):
+    got = {
+        (r.bucket_start, r.cnt, r.sum_cents)
+        for r in harness.all_queries()["q_stream_window"](spark, SF_SMOKE).collect()
+    }
+    from fordgobike_data_pipeline_spark.io import load_tables
+
+    ev = load_tables(spark, SF_SMOKE, ("events",))["events"]
+    want = {
+        (r.b, r.n, r.sc)
+        for r in ev.groupBy(F.window("ts", "1 hour").alias("w"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sc"),
+        )
+        .select(F.col("w.start").alias("b"), "n", "sc")
+        .collect()
+    }
+    assert got == want
+
+
+def test_stream_stateful_matches_batch(spark):
+    got = {
+        r.user_id: (r.n_events, r.sum_cents)
+        for r in harness.all_queries()["q_stream_stateful"](spark, SF_SMOKE).collect()
+    }
+    ev = load_tables(spark, SF_SMOKE, ("events",))["events"]
+    want = {
+        r.user_id: (r.n, r.sc)
+        for r in ev.groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sc"),
+        )
+        .collect()
+    }
+    assert got == want
+
+
+def test_stream_dedup_wm_harness_matches_events(spark):
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    sf = SF_SMOKE
+    out = qs["q_stream_dedup_wm"](spark, sf)
+    ev = spark.read.parquet(f"{sf}/events.parquet")
+    assert out.count() == ev.count()  # each redelivered event exactly once
+    assert out.select("event_id").distinct().count() == out.count()
+
+
+def _plan_node_names(plan) -> set[str]:
+    names, nodes = set(), [plan]
+    while nodes:
+        node = nodes.pop()
+        names.add(node.nodeName())
+        children = node.children()
+        nodes.extend(children.apply(i) for i in range(children.size()))
+    return names
+
+
+def test_stream_stateful_keeps_state_in_the_jvm(spark, monkeypatch):
+    """q_stream_stateful's running totals are a built-in streaming
+    aggregation: the query it starts holds its state in a JVM state
+    store, with no pandas state operator in the executed plan."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    started = []
+    real_start = DataStreamWriter.start
+
+    def start(self, *args, **kwargs):
+        started.append(real_start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", start)
+    harness.all_queries()["q_stream_stateful"](spark, SF_SMOKE).collect()
+    assert len(started) == 1
+    plan = started[0]._jsq.streamingQuery().lastExecution().executedPlan()
+    names = _plan_node_names(plan)
+    assert "FlatMapGroupsInPandasWithState" not in names
+    assert "StateStoreSave" in names
+
+
+class _DataBatches(StreamingQueryListener):
+    """Per streaming run, the number of micro-batches that read rows."""
+
+    def __init__(self):
+        super().__init__()
+        self.runs: dict[str, int] = {}
+        self.done: set[str] = set()
+
+    def onQueryStarted(self, event):
+        self.runs.setdefault(str(event.runId), 0)
+
+    def onQueryProgress(self, event):
+        if event.progress.numInputRows > 0:
+            run = str(event.progress.runId)
+            self.runs[run] = self.runs.get(run, 0) + 1
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.done.add(str(event.runId))
+
+
+def _data_batches(spark, action):
+    """Run ``action``; return its result and the data micro-batch count
+    of each streaming run it started, once the listener has seen every
+    run's termination (posted after its last progress event)."""
+    import time
+
+    tally = _DataBatches()
+    spark.streams.addListener(tally)
+    try:
+        out = action()
+        deadline = time.time() + 30
+        while set(tally.runs) - tally.done and time.time() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(tally)
+    assert not set(tally.runs) - tally.done, "listener never saw the runs end"
+    return out, list(tally.runs.values())
+
+
+@pytest.mark.parametrize("name", ["q_stream_mv", "q_stream_cdc"])
+def test_stream_key_runs_two_data_batches(spark, name):
+    """The two landed waves must reach the MV/CDC state as at least two
+    micro-batches with data, or the cross-batch merge never runs."""
+    _, runs = _data_batches(
+        spark, lambda: harness.all_queries()[name](spark, SF_SMOKE).collect()
+    )
+    assert len(runs) == 1 and runs[0] >= 2
+
+
+def _to_parquet(stream, root):
+    return stream.writeStream.format("parquet").option("path", os.path.join(root, "out"))
+
+
+def test_stream_waves_raises_when_one_wave_holds_all_data(spark):
+    """All rows in one wave means one data micro-batch: no state ever
+    carries across batches, so the landing protocol must refuse it."""
+    rows = spark.range(0, 20, 1, 1).withColumnRenamed("id", "k")
+    with pytest.raises(RuntimeError, match="1 data micro-batch"):
+        _stream_waves(spark, [rows, rows.limit(0)], _to_parquet)
+
+
+def test_stream_waves_trigger_one_wave_of_files(spark):
+    """Multi-file waves (the sf1 replica lands ten files per wave) still
+    run as one micro-batch per wave: a literal one-file trigger would
+    run six batches here, and no trigger at all one."""
+    rows = spark.range(0, 60, 1, 3).withColumnRenamed("id", "k")
+    waves = [rows.filter(F.col("k") % 2 == wv) for wv in (0, 1)]
+    root, runs = _data_batches(spark, lambda: _stream_waves(spark, waves, _to_parquet))
+    assert runs == [2]
+    assert spark.read.parquet(os.path.join(root, "out")).count() == 60

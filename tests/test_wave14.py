@@ -1,12 +1,10 @@
 """Behavioral tests for the round-6 wave-14 operators: interval
 concurrency (sweep-line), Kendall tau construction, matryoshka
-truncation recall bounds, streaming dedup equivalence."""
+truncation recall bounds."""
 
 from __future__ import annotations
 
 import datetime as dt
-
-from pyspark.sql import functions as F
 
 from fordgobike_data_pipeline_spark import harness
 from fordgobike_data_pipeline_spark.operators import sessions as sess_ops
@@ -70,57 +68,3 @@ def test_mutual_information_terms_sum_nonnegative(spark):
     rows = harness.all_queries()["q_mutual_information"](spark, SF_SMOKE).collect()
     total = sum(r.mi_term for r in rows)
     assert total >= -1e-6 * len(rows)
-
-
-def test_stream_dedup_matches_batch_distinct(spark):
-    agg = {
-        r.event_type: r.n_events
-        for r in harness.all_queries()["q_stream_dedup"](spark, SF_SMOKE).collect()
-    }
-    from fordgobike_data_pipeline_spark.io import load_tables
-
-    ev = load_tables(spark, SF_SMOKE, ("events",))["events"]
-    expected = {
-        r.event_type: r.n
-        for r in ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert agg == expected
-
-
-def test_stream_session_matches_batch_native(spark):
-    """Streaming session_window (append + flush sentinel) must emit
-    exactly the batch-native session set."""
-    from fordgobike_data_pipeline_spark.io import load_tables
-    from fordgobike_data_pipeline_spark.operators import sessions as sess_ops
-
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in harness.all_queries()["q_stream_session"](spark, SF_SMOKE).collect()
-    }
-    ev = load_tables(spark, SF_SMOKE, ("events",))["events"]
-    want = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in sess_ops.session_windows_native(ev, gap="30 minutes").collect()
-    }
-    assert got == want
-
-
-def test_stream_window_matches_batch_buckets(spark):
-    got = {
-        (r.bucket_start, r.cnt, r.sum_cents)
-        for r in harness.all_queries()["q_stream_window"](spark, SF_SMOKE).collect()
-    }
-    from fordgobike_data_pipeline_spark.io import load_tables
-
-    ev = load_tables(spark, SF_SMOKE, ("events",))["events"]
-    want = {
-        (r.b, r.n, r.sc)
-        for r in ev.groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sc"),
-        )
-        .select(F.col("w.start").alias("b"), "n", "sc")
-        .collect()
-    }
-    assert got == want

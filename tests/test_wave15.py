@@ -1,6 +1,6 @@
 """Behavioral tests for the round-6 wave-15 operators: decision-stump
 split search (planted-split recovery), k-anonymity audit, KL
-divergence nonnegativity, exact stateful streaming totals."""
+divergence nonnegativity."""
 
 from __future__ import annotations
 
@@ -74,21 +74,3 @@ def test_kl_divergence_nonnegative(spark):
     out = harness.all_queries()["q_kl_divergence"](spark, SF_SMOKE).collect()[0]
     assert out.kl_ab >= 0.0 and out.kl_ba >= 0.0
     assert out.vocab > 0
-
-
-def test_stream_stateful_matches_batch(spark):
-    got = {
-        r.user_id: (r.n_events, r.sum_cents)
-        for r in harness.all_queries()["q_stream_stateful"](spark, SF_SMOKE).collect()
-    }
-    ev = load_tables(spark, SF_SMOKE, ("events",))["events"]
-    want = {
-        r.user_id: (r.n, r.sc)
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sc"),
-        )
-        .collect()
-    }
-    assert got == want

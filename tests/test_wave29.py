@@ -1,6 +1,6 @@
 """Wave-29 operators: tokenizer fertility, PR threshold sweep, token
-budget water-filling, LSH design sweep, norm outliers, streaming
-redelivery dedup — planted-value tests."""
+budget water-filling, LSH design sweep, norm outliers — planted-value
+tests."""
 
 from __future__ import annotations
 
@@ -86,14 +86,3 @@ def similarity_norm_outliers(emb):
     from fordgobike_data_pipeline_spark.operators import similarity
 
     return similarity.norm_outliers(emb).collect()
-
-
-def test_stream_dedup_wm_harness_matches_events(spark):
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
-    sf = "/root/testdata/sf0.001"
-    out = qs["q_stream_dedup_wm"](spark, sf)
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    assert out.count() == ev.count()  # each redelivered event exactly once
-    assert out.select("event_id").distinct().count() == out.count()
