@@ -1127,7 +1127,8 @@ def q_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded — zero joins, zero iterations, one aggregation. The
     oracle runs the genuine recursive CTE; subtree sums are integer
     cents. For hierarchies WITHOUT computable parents, the fallback is
-    the iterative-join loop (dedup.connected_components' pattern)."""
+    the iterative loop of dedup.connected_components (one observed
+    eager checkpoint per round)."""
     part = load_tables(spark, sf_dir, ("part",))["part"]
     df = part.select(
         F.col("p_partkey").cast("long").alias("a0"),

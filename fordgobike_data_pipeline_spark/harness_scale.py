@@ -13,7 +13,7 @@ so struct-ordering matches SQL ORDER BY.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .harness import query
@@ -3269,22 +3269,24 @@ def q_er_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus it is a no-op pass-through. Component ids are unchanged:
     # every component contains a clean endpoint, and min(member ids) =
     # min over member groups of the group min.
+    # checkpointed: read by the matcher and the stats; their jobs also
+    # count the rows the matcher choice needs (Observations)
+    n_c, n_d = Observation(), Observation()
     cgrp = clean.groupBy("name").agg(
         F.min("clean_id").alias("cgid"),
         F.count(F.lit(1)).cast("long").alias("c_n"),
-    ).localCheckpoint(eager=True)
+    ).observe(n_c, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
     dgrp = dirty.groupBy("name").agg(
         F.min("dirty_id").alias("dgid"),
         F.count(F.lit(1)).cast("long").alias("d_n"),
-    ).localCheckpoint(eager=True)
+    ).observe(n_d, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
     # adaptive matcher (the AQE idea one level up): the contracted
     # name tables are bounded by the name DOMAIN, so when their
     # product is small a broadcast nested-loop levenshtein is ONE
     # stage and beats the 6-shuffle SymSpell index DAG; past the cap
     # the deletion-neighborhood index join takes over (the 100 TB
-    # path). The two counts are bounded control data (1 row each).
-    n_c, n_d = cgrp.count(), dgrp.count()
-    if n_c * n_d <= 4_000_000:
+    # path).
+    if n_c.get["n"] * n_d.get["n"] <= 4_000_000:
         pairs = (
             dgrp.select("dgid", F.col("name").alias("_rn"))
             .crossJoin(F.broadcast(cgrp.select("cgid", F.col("name").alias("_ln"))))
@@ -3300,10 +3302,6 @@ def q_er_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
             "name",
             max_dist=1,
         ).select("cgid", "dgid")
-    # the contracted edge list is name-domain-sized: collapse it to one
-    # partition so each CC fixpoint round is a single-task job instead
-    # of 32 near-empty tasks
-    pairs = pairs.coalesce(1).localCheckpoint(eager=True)
     cc = dedup_mod.connected_components(pairs, "cgid", "dgid")
     stats = cc.join(
         cgrp.select(F.col("cgid").alias("node"), F.col("c_n").alias("n_all"))
@@ -4466,13 +4464,11 @@ _PI_STEP = """
                      generate_subscripts(embedding, 1) AS pos
               FROM embeddings)
     ),
-    u1 AS (SELECT vec_id, CAST(sum(q) AS BIGINT) AS u FROM e GROUP BY 1),
-    w1 AS (SELECT pos, sum(CAST(q AS HUGEINT) * u) AS w
-           FROM e JOIN u1 USING (vec_id) GROUP BY pos),
-    m1 AS (SELECT max(abs(w)) AS m FROM w1),
-    v1 AS (SELECT pos, CASE WHEN w >= 0 THEN (w * 1000) // m
-                            ELSE -(((0 - w) * 1000) // m) END AS v
-           FROM w1, m1),
+    j AS (SELECT pos FROM e GROUP BY pos
+          ORDER BY sum(CAST(q AS HUGEINT) * q) DESC, pos LIMIT 1),
+    v0 AS (SELECT DISTINCT pos, CASE WHEN pos = (SELECT pos FROM j)
+                                     THEN 1 ELSE 0 END AS v FROM e),
+    {_PI_STEP.format(t=1, p=0)},
     {_PI_STEP.format(t=2, p=1)},
     {_PI_STEP.format(t=3, p=2)},
     s AS (SELECT e.vec_id, sum(CAST(q AS HUGEINT) * v) AS sv
@@ -4500,7 +4496,7 @@ def q_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse, and dominant_dim names the axis to project out. Exact
     integer iterate (sign-aware truncating renormalization each
     round), decimal/HUGEINT second moments, one double divide; the
-    oracle unrolls the same 3 rounds."""
+    oracle unrolls the same 3 rounds from the same max-variance axis."""
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     # dim pinned by FIXTURES.md (embeddings are 64-wide at every SF):
     # skips the one-row driver probe job (VERDICT r9 item 6)

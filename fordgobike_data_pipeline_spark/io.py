@@ -86,7 +86,9 @@ def append(df: DataFrame, path: str, partition_by: list[str]) -> None:
     has no partitions and so replaces none: a stale batch N stays, and
     a table that only ever took empty batches has no file to read a
     schema from. Unpartitioned, it would replace the whole table, so
-    that is refused."""
+    that is refused. Into a table that :func:`publish_overwrite`
+    versions (the IVF index's ``lists``), the write lands in the current
+    version directory, which a later publish replaces or prunes."""
     if not partition_by:
         raise ValueError(f"append to {path} needs the batch partition columns")
     (
@@ -113,9 +115,6 @@ def publish_overwrite(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     return _commit(writer, path, keep)
-
-
-publish_versioned = publish_overwrite
 
 
 def _commit(writer, path: str, keep: int = 3) -> int:

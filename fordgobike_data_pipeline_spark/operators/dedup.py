@@ -22,7 +22,7 @@ keep degenerate buckets bounded.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -483,82 +483,78 @@ def connected_components(
 
     Iterative DataFrame algorithm (legitimately non-SQL-expressible):
     every node starts labeled with itself; each round takes the min of
-    its own and its neighbors' labels; stops at fixpoint (checked with
-    a counted action per round) or max_iter. Near-dup components are
-    tiny (diameter ≪ rounds); each round is one join + one aggregation,
-    labels cached between rounds.
+    its own and its neighbors' labels; stops at fixpoint or max_iter.
+    The state is one row per node (label + neighbor list), so a round
+    is one explode + one group-by and no join. Each round is ONE eager
+    localCheckpoint whose job also counts the changed labels through an
+    Observation; the last round's checkpoint is the result. Near-dup
+    components are tiny (diameter ≪ rounds).
 
     Returns (node, component) where component = min node id reachable.
     """
-    # cache the edge list: every fixpoint round re-reads it, and without
-    # the cache each round would recompute the whole upstream pair
-    # pipeline (e.g. MinHash) from scratch — measured 8x wall difference.
-    # Both directions come from ONE explode, not union(fwd, swapped):
-    # the union referenced the pairs subtree twice, so the (often
-    # expensive) upstream pair pipeline executed twice inside the
-    # materializing count — the diamond-subtree trap again (measured on
-    # q_clean_corpus: the full MinHash chain ran 2x, ~2s of 6.3s)
-    edges = (
+    # Both directions come from ONE explode: union(fwd, swapped) reads
+    # the pairs subtree twice, so the (often expensive) upstream pair
+    # pipeline runs twice (measured on q_clean_corpus: ~2s of 6.3s)
+    n_edges = Observation()
+    graph = (
         pairs.select(
             F.explode(
                 F.array(
-                    F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-                    F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
+                    F.struct(F.col(id_a).alias("node"), F.col(id_b).alias("nbr")),
+                    F.struct(F.col(id_b).alias("node"), F.col(id_a).alias("nbr")),
                 )
             ).alias("e")
         )
-        .select("e.src", "e.dst")
-        .distinct()
-        .cache()
-    )
-    # size-aware layout (round 10): the fixpoint's cost at SMALL edge
-    # counts is pure scheduling — each round is 2 shuffles x
-    # shuffle.partitions near-empty tasks. Materializing the cache
-    # costs one count (needed anyway on first use); below the
-    # threshold, collapse both sides to one partition so every round
-    # is a couple of single-task stages. Above it, nothing changes —
-    # the big-graph path keeps full parallelism. Result values are
-    # identical either way (min-label is partitioning-invariant).
-    if edges.count() <= 200_000:
-        edges = edges.coalesce(1)
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
+        .groupBy("e.node")
+        .agg(F.collect_set("e.nbr").alias("nbrs"))
+        .observe(n_edges, F.sum(F.size("nbrs")).alias("n"))
         .withColumn("component", F.col("node"))
-        .cache()
+        # every round re-reads the graph: without this checkpoint each
+        # round would recompute the whole upstream pair pipeline (e.g.
+        # MinHash) from scratch — measured 8x wall difference
+        .localCheckpoint(eager=True)
+    )
+    # size-aware layout (round 10): below 200k edges a round is pure
+    # scheduling. A one-partition input satisfies the group-by, so the
+    # round plans no exchange and runs as ONE single-task job (AQE runs
+    # an exchange's map side as a job of its own). A checkpoint forgets
+    # the layout, so each round re-declares it. Min-label results are
+    # partitioning-invariant; big graphs keep full parallelism.
+    small = (n_edges.get["n"] or 0) <= 200_000
+    # each node sends its label to itself, with its neighbor list, and
+    # to each neighbor with none; the group-by keeps the min
+    no_nbrs = F.lit(None).cast(graph.schema["nbrs"].dataType)
+    msgs = F.concat(
+        F.array(F.struct("node", "component", "nbrs")),
+        F.transform(
+            "nbrs",
+            lambda n: F.struct(n.alias("node"), "component", no_nbrs.alias("nbrs")),
+        ),
     )
     for _ in range(max_iter):
-        neighbor = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        updated = (
-            labels.join(neighbor, labels.node == neighbor.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-                (F.coalesce("nbr_min", F.col("component")) < F.col("component")).alias(
-                    "_changed"
-                ),
+        n_changed = Observation()
+        graph = (
+            (graph.coalesce(1) if small else graph)
+            .select(F.inline(msgs))
+            .groupBy("node")
+            .agg(
+                F.min("component").alias("component"),
+                F.max("nbrs").alias("nbrs"),  # the self row's, the one non-NULL
+                F.min(F.when(F.col("nbrs").isNotNull(), F.col("component")))
+                .alias("old"),
             )
-            .cache()
+            .observe(
+                n_changed,
+                F.count(F.when(F.col("component") < F.col("old"), 1)).alias("n"),
+            )
+            .drop("old")
+            # the round's one job: cuts the lineage (plan depth stays
+            # constant) and carries the fixpoint count
+            .localCheckpoint(eager=True)
         )
-        n_changed = updated.filter(F.col("_changed")).count()  # materializes cache
-        old = labels
-        labels = updated.drop("_changed")
-        old.unpersist()
-        if n_changed == 0:
+        if n_changed.get["n"] == 0:
             break
-    # truncate lineage executor-side (no driver collect) before
-    # releasing the caches — callers then recompute nothing
-    final = labels.localCheckpoint(eager=True)
-    if hasattr(labels, "unpersist"):
-        labels.unpersist()
-    edges.unpersist()
-    return final
+    return graph.select("node", "component")
 
 
 def dedup_clusters(

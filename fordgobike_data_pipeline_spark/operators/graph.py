@@ -22,7 +22,7 @@ deterministic approximation rather than a nondeterministic exact sum.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000_000  # 1e12 fixed-point rank scale
@@ -50,15 +50,15 @@ def pagerank(
 
     Checkpoint ``iterations`` stays small (this is the bounded-hop
     authority prior, not a convergence loop); for a convergence-style
-    run, localCheckpoint every few iterations to cut lineage, exactly
-    as dedup.connected_components does.
+    run, make each iteration one eager localCheckpoint that observes its
+    change count, exactly as dedup.connected_components does.
 
     Returns (node, rank_int, rank) — rank_int is the exact fixed-point
     BIGINT (hash-comparable), rank its double rendering.
     """
     # every iteration re-reads the edge table; cut its upstream lineage
     # (often a DISTINCT or union) so it materializes once, the same
-    # contract as dedup.connected_components' iteration checkpoints
+    # contract as dedup.connected_components' graph checkpoint
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).localCheckpoint()
@@ -219,9 +219,9 @@ def bfs_hops(
     — no all-pairs work, and a node is expanded exactly once no matter
     how many paths reach it (the anti-join dedups). The loop runs
     ``max_hops`` times on the driver but every iteration's data work
-    is fully distributed; ``localCheckpoint`` cuts the lineage each
-    hop so plan depth stays constant (the iterative-algorithm
-    discipline PageRank at :func:`pagerank` uses).
+    is fully distributed. Each hop is ONE eager ``localCheckpoint`` of
+    the new frontier that also counts it (Observation); the visited
+    set is a lazy union of those checkpointed hop frames.
 
     The frontier is usually the small side — Spark's AQE converts the
     expansion join to broadcast when it fits; the visited set grows
@@ -240,17 +240,20 @@ def bfs_hops(
     )
     frontier = visited.select("node")
     for h in range(1, max_hops + 1):
+        n_new = Observation()
         nxt = (
             frontier.join(und, frontier.node == und.src)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("hop", F.lit(h))
+            .observe(n_new, F.count(F.lit(1)).alias("n"))
+            # the hop's one job: later hops read it via the visited union
             .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
+        if n_new.get["n"] == 0:
             break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        visited = visited.unionByName(nxt)
         frontier = nxt.select("node")
     return visited
 

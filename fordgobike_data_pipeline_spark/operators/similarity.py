@@ -2002,13 +2002,14 @@ def spectral_top_share(
     engines and the driver agree bit-exactly; never a float norm).
     The Rayleigh share Σ(A·v)² / (Σv² · Σ‖A‖²) is one double divide
     on exact integers. ``iters`` is FIXED (not convergence-tested) so
-    the oracle unrolls to the same depth.
+    the oracle unrolls to the same depth. The iterate starts at the
+    max-variance axis, so the share is never below 1/dim.
 
     w = Aᵀ(Av) is the corpus-sized reduce of a 64-row vector per
     iteration; the iterate itself is bounded driver control data
-    (dim integers — the sanctioned collect class). iters+1 corpus
-    scans; cache the quantized matrix upstream when A doesn't fit
-    the page cache.
+    (dim integers — the sanctioned collect class). iters+2 corpus
+    scans (one picks the start axis); cache the quantized matrix
+    upstream when A doesn't fit the page cache.
 
     Returns one row: (n_rows, dim, top_eigen_share, dominant_dim
     0-based). Pass ``dim`` to skip the one-row probe job; a degenerate
@@ -2036,7 +2037,17 @@ def spectral_top_share(
             lambda x: F.rint(x.cast("double") * F.lit(float(scale))).cast("long"),
         ).alias("_xi")
     ).localCheckpoint()
-    v = [1] * dim
+    # start at the max-variance axis e_j (smallest j on ties): its share
+    # M_jj/tr(M) is >= 1/dim and power iteration on a PSD matrix never
+    # lowers it; an all-ones start can be orthogonal to the top vector
+    diag = (
+        ints.select(F.posexplode(F.col("_xi")).alias("pos", "q"))
+        .groupBy("pos")
+        .agg(F.sum(F.col("q").cast("decimal(38,0)") * F.col("q")).alias("d"))
+        .collect()  # dim rows — bounded driver control data
+    )
+    j = min(diag, key=lambda r: (-r["d"], r["pos"]))["pos"]
+    v = [int(k == j) for k in range(dim)]
     for _ in range(iters):
         varr = F.array(*[F.lit(int(c)).cast("long") for c in v])
         u = F.aggregate(

@@ -22,7 +22,7 @@ state size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
@@ -156,10 +156,6 @@ def stream_curate_documents(
     the batch-mode q_dedup_incremental, now restart-safe and
     file-driven. Readers see ``batch_id`` as a discovered partition
     column on both tables."""
-    import os
-
-    from ..operators import curation, dedup, text
-
     if schema is None:
         schema = StructType.fromDDL("doc_id BIGINT, source STRING, text STRING")
     stream = spark.readStream.schema(schema).json(landing_dir)
@@ -213,14 +209,18 @@ def _curate_batch(
     replay rewrites, never double-counts. Alert on accepted/input
     collapsing (upstream crawl regression) or the dedup share
     spiking (a mirror flood) without scanning the corpus."""
-    import os
-
-    from ..io import append
+    from ..io import _tree_parquet_count, append
     from ..operators import curation, dedup, text
 
     def sink(df: DataFrame, path: str) -> None:
         append(df.withColumn("batch_id", F.lit(batch_id)), path, ["batch_id"])
 
+    # funnel counts, only when metrics are on: Observations read off the
+    # batch's eager checkpoints (a frame one plan reads twice counts once)
+    metered = metrics_path is not None
+    n_in, n_quality, n_exact, n_accepted = (Observation() for _ in range(4))
+    rows = F.count(F.lit(1)).alias("n")
+    batch = batch.observe(n_in, rows) if metered else batch
     cleaned = batch.withColumn("text", curation.normalize_text(F.col("text")))
     scored = (
         text.quality_score(cleaned.select("doc_id", "text"))
@@ -228,12 +228,8 @@ def _curate_batch(
         .select("doc_id")
     )
     kept = cleaned.join(scored, "doc_id", "left_semi")
-    has_index = any(
-        f.endswith(".parquet")
-        for _root, _dirs, files in os.walk(index_path)
-        for f in files
-    )
-    if has_index:
+    kept = kept.observe(n_quality, rows) if metered else kept
+    if _tree_parquet_count(index_path):
         index = (
             batch.sparkSession.read.parquet(index_path)
             # replay: the first attempt may have written this batch's
@@ -244,23 +240,23 @@ def _curate_batch(
     else:
         index = dedup.fingerprint_index(kept).limit(0)
     fresh = dedup.incremental_exact_dedup(kept, index)
+    fresh = fresh.observe(n_exact, rows) if metered else fresh
     fresh = fresh.localCheckpoint(eager=True)  # one pass, N sinks
-    # funnel counts only when metrics are on: each is an extra job per
-    # micro-batch (n_in/n_quality re-execute the normalize + score +
-    # semi-join chain) that a metrics-off deployment shouldn't pay
-    if metrics_path is not None:
-        n_in, n_quality, n_exact = batch.count(), kept.count(), fresh.count()
-    if band_index_path is not None:
+    if band_index_path is None:
+        n_accepted = n_exact
+    else:
         fresh = _near_dedup_batch(
             fresh, batch_id, accepted_path, band_index_path, jaccard_threshold
         )
+        fresh = fresh.observe(n_accepted, rows) if metered else fresh
+        fresh = fresh.localCheckpoint(eager=True)  # one pass, N sinks
     sink(fresh, accepted_path)
     sink(dedup.fingerprint_index(fresh), index_path)
     if band_index_path is not None:
         sink(dedup.minhash_band_index(fresh), band_index_path)
-    if metrics_path is not None:
+    if metered:
         row = batch.sparkSession.createDataFrame(
-            [(n_in, n_quality, n_exact, fresh.count())],
+            [tuple(o.get["n"] for o in (n_in, n_quality, n_exact, n_accepted))],
             "n_in BIGINT, n_quality BIGINT, n_exact BIGINT, n_accepted BIGINT",
         )
         sink(row, metrics_path)
@@ -277,22 +273,17 @@ def _near_dedup_batch(
     clustering (keep the min-id doc per component), then drop batch
     docs whose Jaccard vs any ALREADY-ACCEPTED doc clears the
     threshold. Replay-safe: both the band index and the archive text
-    exclude the batch's own partition."""
-    import os
-
+    exclude the batch's own partition. The caller checkpoints the
+    result."""
+    from ..io import _tree_parquet_count
     from ..operators import dedup
 
     in_batch = dedup.minhash_lsh_pairs(
         fresh, threshold=jaccard_threshold
     )
     survivors = dedup.dedup_clusters(fresh, in_batch)
-    has_band = any(
-        f.endswith(".parquet")
-        for _root, _dirs, files in os.walk(band_index_path)
-        for f in files
-    )
-    if not has_band:
-        return survivors.localCheckpoint(eager=True)
+    if not _tree_parquet_count(band_index_path):
+        return survivors
     spark = fresh.sparkSession
     band_idx = spark.read.parquet(band_index_path).filter(
         F.col("batch_id") != batch_id
@@ -303,7 +294,7 @@ def _near_dedup_batch(
     matched = dedup.incremental_minhash_pairs(
         survivors, band_idx, archive, threshold=jaccard_threshold
     ).select(F.col("id_a").alias("doc_id")).distinct()
-    return survivors.join(matched, "doc_id", "left_anti").localCheckpoint(eager=True)
+    return survivors.join(matched, "doc_id", "left_anti")
 
 
 def stateful_user_totals(events: DataFrame) -> DataFrame:

@@ -74,7 +74,7 @@ def test_publish_overwrite_atomic_swap(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Versioned publish (io.publish_versioned): snapshots, time travel,
+# Versioned publish (io.publish_overwrite): snapshots, time travel,
 # rollback, pruning
 # ---------------------------------------------------------------------------
 
@@ -87,8 +87,8 @@ def test_versioned_publish_time_travel_and_rollback(spark, tmp_path):
     def df_of(n):
         return spark.range(n).withColumnRenamed("id", "x")
 
-    v1 = io_mod.publish_versioned(df_of(3), path)
-    v2 = io_mod.publish_versioned(df_of(5), path)
+    v1 = io_mod.publish_overwrite(df_of(3), path)
+    v2 = io_mod.publish_overwrite(df_of(5), path)
     assert (v1, v2) == (1, 2)
     # current reads the newest snapshot; time travel reads the old one
     assert io_mod.read_versioned(spark, path).count() == 5
@@ -104,7 +104,7 @@ def test_versioned_publish_prunes_beyond_keep(spark, tmp_path):
 
     path = str(tmp_path / "t")
     for n in range(1, 6):
-        io_mod.publish_versioned(spark.range(n), path, keep=2)
+        io_mod.publish_overwrite(spark.range(n), path, keep=2)
     assert io_mod.list_versions(path) == [4, 5]
     assert io_mod.read_versioned(spark, path).count() == 5
     import pytest as _pytest
@@ -122,9 +122,9 @@ def test_versioned_reader_survives_concurrent_republish(spark, tmp_path):
     from fordgobike_data_pipeline_spark import io as io_mod
 
     path = str(tmp_path / "t")
-    io_mod.publish_versioned(spark.range(7), path)
+    io_mod.publish_overwrite(spark.range(7), path)
     snapshot = io_mod.read_versioned(spark, path)  # resolves v=1
-    io_mod.publish_versioned(spark.range(9), path)  # v=2 publishes
+    io_mod.publish_overwrite(spark.range(9), path)  # v=2 publishes
     assert snapshot.count() == 7  # still readable, bit-identical
     assert io_mod.read_versioned(spark, path).count() == 9
 

@@ -435,6 +435,44 @@ def test_curate_batch_metrics_sink(spark, tmp_path):
     assert spark.read.parquet(metrics).count() == 1
 
 
+def test_curate_batch_metrics_come_from_observations(spark, tmp_path, monkeypatch):
+    """With the band index and metrics on, the funnel row is read off
+    the batch's checkpoint jobs: no count() runs, and the row equals
+    the four count() values the counting code wrote. n_quality counts
+    kept once although the exact-dedup plan reads kept twice."""
+    accepted = str(tmp_path / "accepted")
+    index = str(tmp_path / "index")
+    band = str(tmp_path / "band")
+    metrics = str(tmp_path / "metrics")
+    good = "the quick brown fox jumps over the lazy dog again and again " * 5
+    base = " ".join(f"word{i} token{i} item{i}" for i in range(14))
+    schema = "doc_id BIGINT, source STRING, text STRING"
+    b0 = spark.createDataFrame(
+        [(1, "s1", good), (2, "s1", "!!! ??? !!!"), (3, "s1", good)], schema
+    )
+    b1 = spark.createDataFrame(
+        [
+            (20, "s2", base + " tail extra"),  # within-batch near-dup of 21
+            (21, "s2", base),
+            (23, "s2", " ".join(f"unique{i} new{i} thing{i}" for i in range(14))),
+            (24, "s2", good),  # cross-batch exact dup of 1
+        ],
+        schema,
+    )
+    calls = []
+    real = type(b0).count
+    monkeypatch.setattr(type(b0), "count", lambda self: calls.append(self) or real(self))
+    for batch_id, b in enumerate((b0, b1)):
+        incremental._curate_batch(
+            b, batch_id, accepted, index, 0.3,
+            band_index_path=band, metrics_path=metrics,
+        )
+    assert calls == []
+    rows = sorted(tuple(r) for r in spark.read.parquet(metrics).collect())
+    # (n_in, n_quality, n_exact, n_accepted, batch_id)
+    assert rows == [(3, 2, 1, 1, 0), (4, 4, 3, 2, 1)]
+
+
 def test_curate_batch_without_metrics_runs_no_count(spark, tmp_path, monkeypatch):
     """The funnel counts are extra jobs a metrics-off batch must not pay."""
     good = "the quick brown fox jumps over the lazy dog again and again " * 5
